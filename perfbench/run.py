@@ -46,11 +46,8 @@ JVM_OPTS = [f"--add-opens={p}=ALL-UNNAMED" for p in ADD_OPENS] + [
     "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
 ]
 
-# Which op phase each end-to-end latency comes from.
+# Which op phase the end-to-end latencies come from.
 PRIMARY = {"api": "open", "batch_queries": "query"}
-# api's reads are its cached reads; on batch_queries every timed query is
-# a read.
-READS = {"api": "hot"}
 ROUTES = ["point", "point_range", "region", "stats", "metric_monthly",
           "metric_climatology", "metric_percentiles", "metric_trend",
           "metric_trend_sig", "metric_anomaly"]
@@ -168,11 +165,8 @@ def end_to_end(rep, launched):
     sc = rep["scalars"]
     ops = ops_of(rep)
     prim = [o for o in ops if o["phase"] == PRIMARY[w]]
-    reads = [o for o in ops if o["phase"] == READS.get(w, PRIMARY[w])]
     lat = [stats.latency(o) for o in prim]
-    rlat = [stats.latency(o) for o in reads]
     tail_v, tail_pct, tail_n = stats.tail(lat)
-    rtail_v, rtail_pct, rtail_n = stats.tail(rlat)
     if w == "api":
         closed = [o for o in ops if o["phase"] == "closed"]
         work = stats.closed_rate(closed, sc["closed_from_s"])
@@ -184,8 +178,6 @@ def end_to_end(rep, launched):
         "p50_s": stats.p50(lat),
         "tail_s": tail_v,
         "work_per_s": work,
-        "read_tail_s": rtail_v,
-        "bytes_per_item": sc["bytes_per_item"],
     }
     failed = sum(1 for o in ops if not o["ok"])
     marks = sorted((t, k[len("mark."):]) for k, t in sc.items() if k.startswith("mark."))
@@ -194,12 +186,9 @@ def end_to_end(rep, launched):
                           in zip(marks, [launched] + [t for t, _ in marks])},
         "tail_s": {"percentile": round(tail_pct, 2), "beyond": tail_n,
                    "samples": len(lat)},
-        "read_tail_s": {"percentile": round(rtail_pct, 2), "beyond": rtail_n,
-                        "samples": len(rlat)},
         "fail_ratio": failed / len(ops),
         "limit_miss_ratio": sum(1 for x in lat if x >= stats.LIMIT_S) / len(lat),
         "heap_live_mb": sc["heap_live_mb"],
-        "read_mean_s": sum(rlat) / len(rlat),
         "host.steal_s": sc["steal_s"],
         "jvm.gc_s": sc["gc_s"],
         "loadgen.lag_p99_s": (stats.nearest_rank(stats.generator_lag(opened), 0.99)
@@ -210,12 +199,14 @@ def end_to_end(rep, launched):
 
 def per_layer(rep, ops, context):
     """Per-layer values: the JVM's own layer timings plus what derives from
-    the raw ops and the listener counters."""
+    the raw ops and the listener counters. Counters are per operation of
+    the timed phase that computed something: on api the cold requests,
+    every one a cache miss; on batch_queries every query run."""
     w = rep["workload"]
     sc = rep["scalars"]
     v = dict(rep["layers"])
     prim = [o for o in ops if o["phase"] == PRIMARY[w]]
-    n = len(ops)
+    n = sc["counted_ops"]
     for cls in sorted({o["cls"] for o in prim}):
         lat = [stats.latency(o) for o in prim if o["cls"] == cls]
         key = f"serve.route.{cls}.p50_s" if cls in ROUTES else f"queries.{cls}.p50_s"
@@ -229,6 +220,11 @@ def per_layer(rep, ops, context):
         v["spark.shuffle_mb_per_op"] = (sc["spark_shuffle_read_bytes"]
                                         + sc["spark_shuffle_write_bytes"]) / 1048576 / n
         v["spark.spill_mb"] = sc["spark_spill_bytes"] / 1048576
+    hot = [stats.latency(o) for o in ops if o["phase"] == "hot"]
+    if hot:
+        v["serve.hot_tail_s"], pct, beyond = stats.tail(hot)
+        context["serve.hot_tail_s"] = {"percentile": round(pct, 2), "beyond": beyond,
+                                       "samples": len(hot)}
     v["jvm.alloc_mb_per_op"] = sc["alloc_mb"] / n
     v["jvm.gc_s"] = sc["gc_s"]
     v["host.steal_s"] = sc["steal_s"]

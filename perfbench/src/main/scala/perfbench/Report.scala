@@ -1,6 +1,7 @@
 package perfbench
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** One timed operation. Times are seconds since the timed phase began;
   * `intended` is when the operation was due (its schedule slot in an open
@@ -29,8 +30,11 @@ final class Report(val workload: String) {
   def mark(step: String): Unit =
     scalars(s"mark.$step") = System.currentTimeMillis() / 1000.0
 
-  /** Record a timed phase's JVM, host and (traced) Spark counters. */
-  def record(p: Phase.Result): Unit = {
+  /** Record a timed phase's JVM, host and (traced) Spark counters;
+    * `counted` is the number of operations the counters are divided by.
+    */
+  def record(p: Phase.Result, counted: Long): Unit = {
+    scalars("counted_ops") = counted.toDouble
     scalars("heap_live_mb") = p.liveHeapMb
     scalars("gc_s") = p.gcS
     scalars("steal_s") = p.stealS
@@ -42,35 +46,30 @@ final class Report(val workload: String) {
     }
   }
 
-  private def num(v: Double): String =
-    if (java.lang.Double.isFinite(v)) v.toString else "null"
-
-  private def str(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
-
-  private def obj(m: mutable.LinkedHashMap[String, Double]): String =
-    m.map { case (k, v) => str(k) + ":" + num(v) }.mkString("{", ",", "}")
-
+  /** The report as JSON; a non-finite number becomes null. */
   def json: String = {
-    val opsJson = ops.map(o =>
-      s"[${str(o.phase)},${str(o.cls)},${num(o.intended)},${num(o.start)}," +
-        s"${num(o.end)},${o.ok}]").mkString("[", ",", "]")
-    s"""{"workload":${str(workload)},"ops":$opsJson,""" +
-      s""""scalars":${obj(scalars)},"layers":${obj(layers)},""" +
-      s""""notes":${notes.map(str).mkString("[", ",", "]")},""" +
-      s""""check_failures":${checkFailures.map(str).mkString("[", ",", "]")}}"""
+    def nums(m: mutable.LinkedHashMap[String, Double]) =
+      m.map { case (k, v) => k -> (if (v.isFinite) Double.box(v) else null) }.asJava
+    Report.mapper.writeValueAsString(Map(
+      "workload" -> workload,
+      "ops" -> ops.map(o => Seq[Any](o.phase, o.cls, o.intended, o.start, o.end, o.ok)
+        .asJava).asJava,
+      "scalars" -> nums(scalars),
+      "layers" -> nums(layers),
+      "notes" -> notes.asJava,
+      "check_failures" -> checkFailures.asJava).asJava)
   }
 }
 
 object Report {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   def secs(f: => Unit): Double = {
     val t = System.nanoTime(); f; (System.nanoTime() - t) / 1e9
   }
+
+  def mean(xs: Seq[Double]): Double =
+    if (xs.isEmpty) 0.0 else xs.sum / xs.length
 
   def median(xs: Seq[Double]): Double =
     if (xs.isEmpty) 0.0 else { val s = xs.sorted; s(s.length / 2) }
