@@ -11,6 +11,16 @@ import org.apache.spark.sql.functions._
   * Serving caps mirror the reference (`api/main.py:98-102`): 10,000 points
   * and 8,760 time steps per request — enforced as `limit()` guards so a
   * misbehaving client cannot trigger an unbounded collect.
+  *
+  * Request values enter the plans as literals (the snapped cell's range,
+  * bbox edges, time bounds). Under [[Server]] they are bound, not inlined,
+  * in the generated code of the post-scan filter: see
+  * [[graft.plans.ServingPlans]]. The pushed parquet filters are planned
+  * from the real literals and do not change. The server applies the
+  * `limit()` caps as the root of the plan it renders, where Spark runs
+  * them outside generated code; a limit inside a generated stage is new
+  * source on every planning (Spark's `_limit_counter_N` names come from a
+  * JVM-wide sequence).
   */
 object Api {
 
@@ -118,6 +128,19 @@ object Api {
     GridMeta(axis(0, p0), axis(1, p1))
   }
 
+  /** One dataset's geometry, probed at most once at a time: concurrent
+    * first requests wait on the slot while the first runs the two-job
+    * probe (single-flight). A failed probe leaves the slot empty, so the
+    * next request retries.
+    */
+  private final class MetaSlot {
+    private var meta: GridMeta = _
+    def get(probe: => GridMeta): GridMeta = synchronized {
+      if (meta == null) meta = probe
+      meta
+    }
+  }
+
   /** Per-JVM grid-geometry cache keyed by the CANONICALIZED logical plan
     * (structural equality — no hash-collision wrongness) + axis columns.
     * Grid geometry is immutable for a registered dataset: appending time
@@ -126,26 +149,24 @@ object Api {
     */
   private val metaCache =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(Any, String, String), GridMeta](64, 0.75f, true) {
+      new java.util.LinkedHashMap[(Any, String, String), MetaSlot](64, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(Any, String, String), GridMeta]): Boolean =
+            e: java.util.Map.Entry[(Any, String, String), MetaSlot]): Boolean =
           size() > 128
       })
 
   def invalidateGridMeta(): Unit = metaCache.clear()
 
+  private val probes = new java.util.concurrent.atomic.AtomicLong
+
   /** Geometry probes actually run (test observability for cache hits). */
-  @volatile private[serve] var probeCount: Long = 0L
+  private[serve] def probeCount: Long = probes.get
 
   private def cachedMeta(df: DataFrame, latCol: String, lonCol: String): GridMeta = {
     val key = (df.queryExecution.logical.canonicalized, latCol, lonCol)
-    val hit = metaCache.get(key)
-    if (hit != null) hit
-    else {
-      probeCount += 1
-      val m = gridMeta(df, latCol, lonCol)
-      metaCache.put(key, m)
-      m
+    metaCache.computeIfAbsent(key, _ => new MetaSlot).get {
+      probes.incrementAndGet()
+      gridMeta(df, latCol, lonCol)
     }
   }
 
@@ -160,12 +181,15 @@ object Api {
     * only case where per-request coordinate jobs are still paid.
     */
   def nearestCell(df: DataFrame, lat: Double, lon: Double,
-                  latCol: String = "lat", lonCol: String = "lon"): (Double, Double) = {
+                  latCol: String = "lat", lonCol: String = "lon"): (Double, Double) =
+    snapCell(df, cachedMeta(df, latCol, lonCol), lat, lon, latCol, lonCol)
+
+  private def snapCell(df: DataFrame, meta: GridMeta, lat: Double, lon: Double,
+                       latCol: String, lonCol: String): (Double, Double) = {
     def scanNearest(c: String, v: Double): Double =
       df.select(col(c)).distinct()
         .orderBy(abs(col(c) - v), col(c))
         .head().getDouble(0)
-    val meta = cachedMeta(df, latCol, lonCol)
     (meta.lat.snap(lat).getOrElse(scanNearest(latCol, lat)),
       meta.lon.snap(lon).getOrElse(scanNearest(lonCol, lon)))
   }
@@ -210,7 +234,7 @@ object Api {
                  latCol: String = "lat", lonCol: String = "lon")
       : org.apache.spark.sql.Column = {
     val meta = cachedMeta(df, latCol, lonCol)
-    val (nlat, nlon) = nearestCell(df, lat, lon, latCol, lonCol)
+    val (nlat, nlon) = snapCell(df, meta, lat, lon, latCol, lonCol)
     def cellMatch(c: String, snapped: Double, axis: AxisMeta) =
       if (axis.regular && axis.n > 1) {
         val tol = math.abs(axis.res) * 1e-6

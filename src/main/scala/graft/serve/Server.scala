@@ -3,7 +3,9 @@ package graft.serve
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.ingest.BBox
 import graft.model.SeriesSpec
+import graft.plans.ServingPlans
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -36,10 +38,38 @@ import java.nio.charset.StandardCharsets
   * Serving stays bounded: every row payload is `limit()`-capped at
   * [[Api.MaxPointsPerRequest]] / [[Api.MaxTimeSteps]] BEFORE collect, so
   * a client cannot trigger an unbounded driver materialization — the
-  * JSON rows come from `df.toJSON` (Spark's own row serializer), taken
-  * through `toLocalIterator` only after the cap.
+  * JSON rows come from Spark's own row serializer (the generator
+  * `df.toJSON` uses, writing internal rows directly: [[Bridge.jsonRows]]),
+  * taken through `toLocalIterator` only after the cap.
+  *
+  * Serving compiles once per route SHAPE, not once per request: `start`
+  * installs [[graft.plans.ServingPlans]] on the session. Spark inlines
+  * primitive literals into whole-stage generated Java, so each fresh
+  * lat/lon, bbox or time range used to be new source text and a Janino
+  * compile (2–4 classes per cold request); the strategy binds the
+  * post-scan filter's comparison literals into the class's references
+  * instead. The strategy stays installed for the whole session.
+  *
+  * The row cap is outside generated code too. `df.limit(cap).toJSON` put
+  * the limit under `toJSON`'s map, inside a generated stage, and Spark
+  * names each limit's counter from a JVM-wide sequence
+  * (`_limit_counter_16`, `_17` …), so that stage was new source on every
+  * request, even for an identical key. Rendered from
+  * `queryExecution.toRdd`, `limit(cap)` is the plan's root limit, which
+  * Spark runs as `CollectLimitExec` (`TakeOrderedAndProjectExec` over a
+  * sort). Skipping `toJSON`'s external-row round trip also keeps two
+  * generated classes per route schema out of Spark's generated-class
+  * cache, which must hold the routes' classes for the binding to pay off
+  * (SCALE.md, "serving: compile once per route shape").
   */
 object Server {
+
+  // A response goes out in two writes, headers then body. With Nagle's
+  // algorithm on, the body waits for the ACK of the headers, which the
+  // client delays (~40 ms) on every second keep-alive response. The JDK
+  // server reads this property once, when its first HttpServer is created.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
 
   final class Running private[Server] (
       server: HttpServer,
@@ -57,7 +87,7 @@ object Server {
   private def nowUtc: String = java.time.Instant.now().toString
 
   // --- minimal JSON emission (objects we build ourselves; row payloads
-  // are serialized by Spark's toJSON, which owns escaping/typing) ---
+  // are serialized by Spark's JSON generator, which owns escaping/typing) ---
   private def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
@@ -77,7 +107,7 @@ object Server {
 
   /** Collect a capped DataFrame as a JSON array of row objects. */
   private def rowsJson(df: DataFrame, cap: Int): String = {
-    val it = df.limit(cap).toJSON.toLocalIterator()
+    val it = Bridge.jsonRows(df.limit(cap)).toLocalIterator
     val b = new StringBuilder("[")
     var first = true
     while (it.hasNext) {
@@ -127,6 +157,7 @@ object Server {
       // failures degrade to compute via ResilientCache, never to a 500.
       cacheBackend: Option[Cache.CacheBackend] = None
   ): Running = {
+    ServingPlans.install(spark)
     val backend = cacheBackend.getOrElse(
       new Cache.LruBackend(maxEntries = 1024, ttlSeconds = cacheTtlSeconds))
     val cache = new Cache.ResilientCache(backend, ttlSeconds = cacheTtlSeconds)

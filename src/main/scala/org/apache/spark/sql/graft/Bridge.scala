@@ -46,6 +46,30 @@ object Bridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** A DataFrame's rows as JSON object strings, written from Spark's
+    * internal rows by the generator and options `Dataset.toJSON` uses, so
+    * the text is the same. `toJSON` converts each row to an external
+    * `Row` and back, which generates and compiles two classes per schema;
+    * this path generates none.
+    */
+  def jsonRows(df: org.apache.spark.sql.DataFrame): org.apache.spark.rdd.RDD[String] = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
+    val schema = ds.schema
+    val tz = ds.sparkSession.sessionState.conf.sessionLocalTimeZone
+    ds.queryExecution.toRdd.mapPartitions { rows =>
+      val writer = new java.io.CharArrayWriter()
+      val gen = new org.apache.spark.sql.catalyst.json.JacksonGenerator(schema, writer,
+        new org.apache.spark.sql.catalyst.json.JSONOptions(Map.empty[String, String], tz))
+      rows.map { row =>
+        gen.write(row)
+        gen.flush()
+        val json = writer.toString
+        writer.reset()
+        json
+      }
+    }
+  }
+
   /** Register a function builder on a LIVE session (extensions only apply
     * at session build time; `withExtensions` is silently ignored by
     * `getOrCreate` when a session already exists).

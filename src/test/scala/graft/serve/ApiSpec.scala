@@ -105,6 +105,25 @@ class ApiSpec extends SparkSpec {
       s"expected one probe for two identical plans, ran ${Api.probeCount - before}")
   }
 
+  test("concurrent first requests on a dataset run the geometry probe once") {
+    val dir = tmpDir() + "/gridpq"
+    regularGrid.write.parquet(dir)
+    Api.invalidateGridMeta()
+    val before = Api.probeCount
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val threads = (0 until 4).map { i =>
+      val t = new Thread(() => {
+        start.await()
+        Api.cellFilter(spark.read.parquet(dir), i * 0.5, 100.0 + i * 0.25)
+      })
+      t.start(); t
+    }
+    start.countDown()
+    threads.foreach(_.join())
+    assert(Api.probeCount == before + 1,
+      s"expected one probe for four concurrent first requests, ran ${Api.probeCount - before}")
+  }
+
   test("pointSeries on a regular grid: correct cell, one job per warm request") {
     val g = regularGrid.cache()
     g.count() // materialize so the serving scan is one stage

@@ -20,8 +20,18 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private lazy val srv = Server.start(spark, registry)
   private val client = HttpClient.newHttpClient()
 
+  // Server.start installs the serving strategy on the session, which
+  // the suites of this JVM share: the suites after this one plan without it
+  private var strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] = Nil
+
+  override def beforeAll(): Unit = {
+    super.beforeAll()
+    strategies = spark.experimental.extraStrategies
+  }
+
   override def afterAll(): Unit = {
     srv.stop() // releases the socket AND shuts down the handler pool
+    spark.experimental.extraStrategies = strategies
     super.afterAll()
   }
 
@@ -303,6 +313,38 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val ok = get("/api/v1/data/datasets/era5_sample/point?lat=10&lon=20")
     assert(ok.statusCode() == 200 && ok.body().contains("\"data\""))
     assert(get("/health").statusCode() == 200)
+  }
+
+  test("row payloads render exactly as Dataset.toJSON renders them") {
+    import org.apache.spark.sql.functions._
+    val df = grid.orderBy("ts", "lat", "lon").limit(50)
+      .withColumn("day", to_date(col("ts")))
+      .withColumn("maybe", when(col("lon") > 0, col("temperature")))
+      .withColumn("label", concat(lit("a\"b\\c\n\u00e9 "), col("lon").cast("string")))
+      .withColumn("pair", struct(col("lat"), array(col("lon"), lit(Double.NaN))))
+    val expected = df.toJSON.collect().toSeq
+    assert(org.apache.spark.sql.graft.Bridge.jsonRows(df).collect().toSeq == expected)
+    assert(expected.exists(_.contains("\"maybe\"")) && expected.exists(!_.contains("\"maybe\"")))
+  }
+
+  test("cache hits over one keep-alive connection answer without a delayed-ACK stall") {
+    // a response written as two segments (headers, body) with Nagle on
+    // waits ~40 ms for the client's delayed ACK on every second request
+    // of a connection; HttpURLConnection reuses one keep-alive socket
+    val path = "/api/v1/data/datasets/era5_sample/point?lat=-12.0&lon=141.0"
+    def timedGet(): Double = {
+      val t0 = System.nanoTime()
+      val c = URI.create(s"http://127.0.0.1:${srv.port}$path").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      assert(c.getResponseCode == 200)
+      val in = c.getInputStream
+      try in.readAllBytes() finally in.close()
+      (System.nanoTime() - t0) / 1e6
+    }
+    timedGet() // computes and caches
+    val hits = Seq.fill(20)(timedGet()).sorted
+    val median = (hits(9) + hits(10)) / 2
+    assert(median < 20.0, s"median cache hit $median ms; all: ${hits.mkString(", ")}")
   }
 
   test("unknown path 404s; non-GET is a 405") {
