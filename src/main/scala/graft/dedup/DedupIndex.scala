@@ -9,8 +9,12 @@ import org.apache.spark.sql.functions._
   * built over months cannot re-run all-corpus dedup per batch: the index
   * is fit ONCE over the existing corpus, each arriving batch is queried
   * against it (near-dup pairs back), and survivors are APPENDED so the
-  * next batch sees them. The dedup twin of the IVF-PQ index lifecycle in
-  * `sim/Similarity` (fit / serve / append), sharing its store shape.
+  * next batch sees them. The dedup counterpart of the vector stores in
+  * [[graft.sim.CodesStore]] (fit / serve / append / delete / compact over
+  * the same [[graft.util.AtomicStore]] generations, lease and tombstone
+  * reader), with a lifecycle of its own: its unit of writing is a tagged
+  * subdirectory completed by `_SUCCESS`, and its fold keeps a
+  * folded-tags ledger instead of a stream highwater.
   *
   * Store layout: `path/` holds committed generation directories
   * (`gen-N/` + `_commit_N` markers — the crash-atomic publish protocol of
@@ -165,7 +169,7 @@ object DedupIndex {
       // fold drops the dead rows AND the tombstones), so only the new
       // rows serve — the [[graft.sim.Similarity.appendToIvfPqIndex]]
       // contract on the dedup store
-      if (tombstonesOpt(spark, dir).exists(tb =>
+      if (AtomicStore.tombstonesOpt(spark, dir).exists(tb =>
             !tb.join(df.select(col(idCol).as("id")).distinct(),
               Seq("id"), "left_semi").isEmpty)) {
         compact(spark, path)
@@ -209,20 +213,6 @@ object DedupIndex {
         .write.mode("append").parquet(s"$dir/tombstones")
       invalidateCaches(path)
     }
-
-  /** Tombstoned ids of one generation, if any [[delete]] happened in it.
-    * Probed for committed DATA FILES, not bare existence: a delete
-    * killed mid-write leaves a dir holding only `_temporary/`, which
-    * must read as "no tombstones", not brick every later query/append/
-    * compact on failed schema inference.
-    */
-  private def tombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (AtomicStore.hasDataFile(fs, p))
-      Some(spark.read.parquet(p.toString).distinct())
-    else None
-  }
 
   private val StreamTagRe = "^b([0-9]+)$".r
 
@@ -364,7 +354,7 @@ object DedupIndex {
         "unrecorded, so an at-least-once replay can cleanly rewrite both " +
         "tables.")
     if (complete.isEmpty) return
-    val tomb = tombstonesOpt(spark, dir)
+    val tomb = AtomicStore.tombstonesOpt(spark, dir)
     def foldRows(table: String): DataFrame = {
       val rows = spark.read.parquet(complete.map(t => s"$dir/$table/$t"): _*)
       // the fold IS the delete's reclamation: tombstoned ids' rows are
@@ -494,7 +484,7 @@ object DedupIndex {
     // candidate set is anti-joined against the tombstones (small —
     // compaction keeps them bounded), their physical postings stay until
     // the next [[compact]]
-    val cands = tombstonesOpt(spark, dir).fold(cands1)(tb =>
+    val cands = AtomicStore.tombstonesOpt(spark, dir).fold(cands1)(tb =>
       cands1.join(broadcast(tb.select(col("id").as("index_id"))),
         Seq("index_id"), "left_anti"))
     val ixGrams = readStore(spark, s"$dir/grams")

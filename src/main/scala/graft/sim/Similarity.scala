@@ -2,7 +2,7 @@ package graft.sim
 
 import graft.dedup.Dedup
 import graft.util.AtomicStore
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -899,18 +899,31 @@ object Similarity {
       queries.getOrElse(df), idCol, vecCol, k, nprobe, m, sub)
   }
 
-  // ---- Persisted IVF-PQ index: fit once, serve many. At 100 TB the
-  // expensive steps are the codebook fit and the full-corpus encode; an
-  // index that stores their output — a small driver-side model plus a
-  // (cell, cid, codes) table — lets every later query batch skip straight
-  // to the candidate join. The codes table is PARTITIONED BY cell, so a
-  // serve that probes nprobe cells reads only those directories (dynamic
-  // partition pruning through the broadcast probe join); the corpus
-  // vectors themselves are never stored or read again.
+  // ---- Persisted indexes: fit once, serve many. At 100 TB the expensive
+  // steps are the model fit and the full-corpus encode; a store that keeps
+  // their output — a small driver-side model plus a `cell`-partitioned
+  // codes table — lets every later query batch skip straight to the
+  // candidate join, and a serve that probes nprobe cells reads only those
+  // directories (dynamic partition pruning through the broadcast probe
+  // join). The corpus vectors are never stored or read again. Both codecs
+  // below run one lifecycle, [[CodesStore]] (append, stream append,
+  // delete, compact, fold, refit, open); each codec supplies only its id
+  // column, model tables, encode and refit signal.
+
+  private def centroidTable(spark: SparkSession,
+                            cents: Seq[Seq[Double]]): DataFrame = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "vec")
+  }
+
+  private def readCentroids(spark: SparkSession, dir: String): Seq[Seq[Double]] =
+    spark.read.parquet(s"$dir/centroids").orderBy("cell").collect()
+      .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
 
   /** An opened on-disk IVF-PQ index: the small model (centroids m×dim +
     * codebooks m×k×sub, a few KB — driver-held by design, like the
-    * literal centroids the direct path inlines) and the lazy codes table.
+    * literal centroids the direct path inlines) and the lazy live codes
+    * table `(cid, codes, cell)`.
     */
   case class IvfPqIndex(
       cents: Seq[Seq[Double]],
@@ -920,15 +933,55 @@ object Similarity {
       residual: Boolean,
       codes: DataFrame)
 
-  /** Fit an IVF-PQ index on `df` and persist it under `path`, as one
-    * crash-atomically committed generation ([[graft.util.AtomicStore]]):
+  /** The IVF-PQ store: `cid` ids; model tables `meta`, `centroids`,
+    * `codebooks` and the fit-time `cellstats`; refit when some cell's
+    * live occupancy drifted by `threshold` from the fit's
+    * ([[ivfPqCellDrift]]).
+    */
+  private[graft] val ivfPqStore = new CodesStore(new CodesCodec[IvfPqIndex] {
+    val name = "IvfPq"
+    val label = "ivfpq"
+    val idCol = "cid"
+    val modelTables = Seq("meta", "centroids", "codebooks", "cellstats")
+    def load(spark: SparkSession, dir: String): DataFrame => IvfPqIndex = {
+      val meta = spark.read.parquet(s"$dir/meta").head()
+      val m = meta.getAs[Int]("m")
+      val booksFlat = spark.read.parquet(s"$dir/codebooks")
+        .orderBy("j", "c").collect()
+        .map(r => (r.getAs[Int]("j"), r.getSeq[Double](r.fieldIndex("vec"))))
+      val books = (0 until m).map(j => booksFlat.filter(_._1 == j).map(_._2).toSeq)
+      val cents = readCentroids(spark, dir)
+      codes => IvfPqIndex(cents, books, meta.getAs[Int]("dim"), m,
+        meta.getAs[Boolean]("residual"), codes)
+    }
+    def encode(index: IvfPqIndex, df: DataFrame, idCol: String,
+               vecCol: String): DataFrame =
+      encodeForIndex(index, df, idCol, vecCol)
+    def staleness(spark: SparkSession, path: String): Double =
+      ivfPqCellDrift(spark, path).agg(max(abs(col("growth")))).head().getDouble(0)
+    def refit(df: DataFrame, idCol: String, vecCol: String, path: String,
+              meta: Row, streamHighwater: Option[Long]): Unit =
+      writeIvfPqIndex(df, idCol, vecCol, path,
+        dim = meta.getAs[Int]("dim"),
+        nlist = meta.getAs[Int]("nlist"),
+        m = meta.getAs[Int]("m"),
+        codebookSize = meta.getAs[Int]("codebook_size"),
+        seed = meta.getAs[Long]("seed"),
+        residual = meta.getAs[Boolean]("residual"),
+        streamHighwater = streamHighwater)
+  })
+
+  /** Fit an IVF-PQ index on `df` and persist it under `path` as one
+    * crash-atomically committed generation ([[CodesStore.publish]]):
     * `meta` (one row of params), `centroids` (nlist rows), `codebooks`
-    * (m·k rows), and `codes` — one `(cid, codes)` row per corpus vector,
-    * partitioned by `cell`. The fit is exactly [[ivfPqTopK]]'s (same
-    * seeded deterministic coarse Lloyd's on the same input column, same
-    * [[pqCodebooks]] distributed fit, same fused assignment
-    * expressions), so serving from the store reproduces the direct path
-    * bit-for-bit.
+    * (m·k rows), `codes` — one `(cid, codes)` row per corpus vector,
+    * partitioned by `cell` — and `cellstats`, the fit-time cell
+    * occupancy. The fit is exactly [[ivfPqTopK]]'s (same seeded
+    * deterministic coarse Lloyd's on the same input column, same
+    * [[pqCodebooks]] distributed fit, same fused assignment expressions),
+    * so serving from the store reproduces the direct path bit-for-bit.
+    * `streamHighwater` is the last micro-batch a stream-triggered refit
+    * folds in.
     */
   def writeIvfPqIndex(
       df: DataFrame,
@@ -973,47 +1026,20 @@ object Similarity {
           normalizeInput = false)
         (cents, books)
       }
-    // the SAME encode expressions the serve-time grow path uses
-    // ([[encodeWith]] — single-sourced, so fit and append can never
-    // drift apart and break the pinned fit/append bit-equivalence)
-    val assigned = encodeWith(df, idCol, vecCol, cents, books, residual)
-    // crash-atomic publish (graft.util.AtomicStore): every table lands in
-    // a fresh generation directory; the store only advances when the
-    // single marker-file commit lands AFTER the last table. A crash (or a
-    // concurrent reader) at any point between sub-table writes sees the
-    // previous committed generation, never new meta over old codes. A
-    // fresh generation also starts with no tombstones — a (re)fit defines
-    // the whole store, so earlier deletes cannot hide fresh vectors.
-    val (gen, gdir) = AtomicStore.begin(spark, path)
-    AtomicStore.failpoint("ivfpq:meta")
-    Seq((dim, m, codebookSize, nlist, residual, seed))
-      .toDF("dim", "m", "codebook_size", "nlist", "residual", "seed")
-      .write.mode("overwrite").parquet(s"$gdir/meta")
-    AtomicStore.failpoint("ivfpq:centroids")
-    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$gdir/centroids")
-    AtomicStore.failpoint("ivfpq:codebooks")
-    books.zipWithIndex.flatMap { case (bj, j) =>
-      bj.zipWithIndex.map { case (cv, c) => (j, c, cv) }
-    }.toDF("j", "c", "vec")
-      .write.mode("overwrite").parquet(s"$gdir/codebooks")
-    AtomicStore.failpoint("ivfpq:codes")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    AtomicStore.failpoint("ivfpq:cellstats")
-    // fit-time cell occupancy snapshot — the baseline the staleness
-    // signal compares against ([[ivfPqCellDrift]]); derived from the
-    // stored codes so it reflects exactly what the index holds
-    spark.read.parquet(s"$gdir/codes").groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_fit"))
-      .write.mode("overwrite").parquet(s"$gdir/cellstats")
-    // stream-maintained indexes ([[appendStreamBatch]]) record the last
-    // FOLDED micro-batch id INSIDE the generation, before the commit —
-    // atomic with the fit, so an at-least-once replay of that batch can
-    // never double-apply it (the append guard reads this watermark)
-    writeStreamHighwater(spark, gdir, streamHighwater)
-    AtomicStore.commit(spark, path, gen)
-    // the model under `path` just changed — drop any cached open
-    invalidateIndexModel(path)
+    ivfPqStore.publish(spark, path, streamHighwater)(
+      ("meta", _ => Seq((dim, m, codebookSize, nlist, residual, seed))
+        .toDF("dim", "m", "codebook_size", "nlist", "residual", "seed")),
+      ("centroids", _ => centroidTable(spark, cents)),
+      ("codebooks", _ => books.zipWithIndex.flatMap { case (bj, j) =>
+        bj.zipWithIndex.map { case (cv, c) => (j, c, cv) }
+      }.toDF("j", "c", "vec")),
+      // the SAME encode the grow path uses ([[encodeWith]]), so fit and
+      // append can never drift apart
+      ("codes", _ => encodeWith(df, idCol, vecCol, cents, books, residual)),
+      // the drift baseline ([[ivfPqCellDrift]]), read back from the stored
+      // codes so it reflects exactly what the index holds
+      ("cellstats", gdir => spark.read.parquet(s"$gdir/codes")
+        .groupBy(col("cell")).agg(count(lit(1)).as("n_fit"))))
   }
 
   /** Encode vectors with an OPENED index's stored model — the exact
@@ -1051,537 +1077,42 @@ object Similarity {
           col("cell"))
     }
 
-  /** Append new vectors to a persisted index: encode with the STORED
-    * centroids/codebooks ([[encodeForIndex]] — no refit, so existing
-    * codes stay valid) and write into the same cell-partitioned layout
-    * (each new file lands inside its cell directory; serving's partition
-    * pruning is unaffected). The fit-time `cellstats` snapshot is
-    * deliberately NOT updated — the growing gap between it and the
-    * live occupancy IS the refit signal ([[ivfPqCellDrift]]): appended
-    * vectors are quantized against centroids fit on the old
-    * distribution, so accumulating drift degrades recall even though
-    * every individual append is exact.
-    *
-    * Caller owns id-uniqueness (an appended cid equal to a stored LIVE cid
-    * produces two candidate rows, like any append-only store). Re-adding a
-    * previously DELETED cid is handled: the store is compacted first, so
-    * the tombstone is gone and only the new vector serves — delete→re-add
-    * is an upsert, never stale emptiness or a dead-row resurrection.
+  /** Append vectors encoded with the STORED model ([[CodesStore.append]]).
+    * The fit-time `cellstats` stays as it was: the growing gap between it
+    * and the live occupancy IS the refit signal ([[ivfPqCellDrift]]).
     */
   def appendToIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
-                         path: String): Unit = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path, owner = "appendToIvfPqIndex") {
-      // resolve the committed generation ONCE; every sub-step of the append
-      // works inside it (single-writer store, now lease-enforced). A
-      // crashed append is invisible: parquet appends stage in `_temporary/`,
-      // which readers ignore.
-      val dir = AtomicStore.resolve(spark, path)
-      val ids = df.select(col(idCol).as("cid")).distinct()
-      // fast path: no tombstones, or none colliding — just a semi-join probe
-      if (tombstonesOpt(spark, dir)
-            .exists(t => !t.join(ids, Seq("cid"), "left_semi").isEmpty))
-        compactIn(spark, dir)
-      val index = openIvfPqIndexIn(spark, dir)
-      encodeForIndex(index, df, idCol, vecCol)
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-    }
-  }
+                         path: String): Unit =
+    ivfPqStore.append(df, idCol, vecCol, path)
 
-  /** Delete vectors from a persisted index by id: appends the ids to a
-    * `tombstones` table — no codes rewrite, so a delete is as cheap as a
-    * small parquet append regardless of corpus size. [[openIvfPqIndex]]
-    * anti-joins the codes against the tombstones, so serving and the
-    * drift signal see only live vectors immediately; the dead rows stay
-    * on disk until [[compactIvfPqIndex]] rewrites their cells.
-    *
-    * Tombstones apply to the WHOLE store at open time: re-appending a
-    * previously deleted id resurrects nothing until the store is
-    * compacted (the standard tombstone caveat — compact before re-add).
-    *
-    * SINGLE-WRITER contract, ENFORCED (deletes vs streaming replay): a
-    * replayed micro-batch rewrites its own `codes_stream` partitions
-    * from the RAW batch — under the live anti-join mask that is
-    * invisible, but a delete + compaction racing the narrow window
-    * between a batch's write and its checkpoint commit would drop the
-    * mask an in-flight replay still needs. Every mutation here therefore
-    * takes the store's MUTATION LEASE
-    * ([[graft.util.AtomicStore.withMutationLease]]); the stream driver
-    * holds it for each batch, so a concurrent delete REJECTS loudly
-    * instead of corrupting — retry between batches.
-    */
+  /** Tombstone ids; serving masks them at once ([[CodesStore.delete]]). */
   def deleteFromIvfPqIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    AtomicStore.withMutationLease(ids.sparkSession, path,
-        owner = "deleteFromIvfPqIndex") {
-      ids.select(col(idCol).as("cid")).distinct()
-        .write.mode("append").parquet(
-          s"${AtomicStore.resolve(ids.sparkSession, path)}/tombstones")
-    }
+    ivfPqStore.delete(ids, idCol, path)
 
-  /** Tombstones table of one generation directory if any delete has
-    * happened in it, else None.
-    */
-  private def tombstonesOpt(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    // data-file probe, not bare exists: a delete killed mid-write leaves
-    // a tombstones dir holding only _temporary/, which would fail schema
-    // inference and brick every later open/serve/compact on the store
-    if (AtomicStore.hasDataFile(fs, p))
-      Some(spark.read.parquet(p.toString).distinct())
-    else None
-  }
-
-  /** Schema-robust read of a `codes_stream` extension table: an EXPLICIT
-    * schema (the base codes schema + the `batch_id` partition column),
-    * so a directory holding no committed parquet files — every row
-    * tombstone-compacted away, or a crashed FIRST append's lone
-    * `_temporary/` — reads as an empty frame instead of failing schema
-    * inference and bricking every open/serve on the store.
-    */
-  private def readStreamExt(spark: SparkSession, extPath: String,
-      baseSchema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.StructType(
-        baseSchema.fields :+ org.apache.spark.sql.types.StructField(
-          "batch_id", org.apache.spark.sql.types.LongType)))
-      .parquet(extPath)
-
-  /** The live view of the codes table: stored codes minus tombstoned ids.
-    * The anti-join broadcasts while the tombstone set is small (the
-    * normal regime — compaction keeps it from growing unboundedly) and
-    * degrades to a shuffled anti-join, never a scan-per-id, beyond that.
-    */
-  private def liveCodes(spark: SparkSession, dir: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
-    val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-    val base = reader.parquet(s"$dir/codes")
-    // stream-grown extension ([[appendStreamBatch]]): same (cid, codes,
-    // cell) rows, additionally partitioned by batch_id for idempotent
-    // replay — union preserves cell partition pruning on both sides
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val codes =
-      if (extP.getFileSystem(spark.sessionState.newHadoopConf()).exists(extP))
-        base.unionByName(readStreamExt(spark, extP.toString, base.schema)
-          .select(base.columns.toIndexedSeq.map(col): _*))
-      else base
-    tombstonesOpt(spark, dir)
-      .map(t => codes.join(t, Seq("cid"), "left_anti")).getOrElse(codes)
-  }
-
-  /** Mark a stream micro-batch's extension write as fully JOB-COMMITTED:
-    * an empty `_complete_b<N>` file at the extension root, created only
-    * AFTER the batch's parquet job commits (and re-created by an
-    * at-least-once replay's rewrite). The extension folds read these as
-    * the completion boundary: a kill inside the parquet job — including
-    * inside the committer's file-move loop, which leaves PARTIAL data
-    * files — leaves no sentinel, so a fold that runs before the stream
-    * restarts must neither merge that batch's partial rows into base nor
-    * raise the highwater over it (the replay would then be absorbed and
-    * the partial rows would serve forever). Underscore-prefixed, so
-    * Spark's file index and [[streamExtensionDirCount]] both ignore it;
-    * the files live and die with the extension directory.
-    */
-  private def writeBatchSentinel(spark: SparkSession, dir: String,
-                                 batchId: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$dir/codes_stream/_complete_b$batchId")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.create(p, true).close()
-  }
-
-  /** Batch ids the extension holds completion sentinels for. `None` for
-    * a PRE-SENTINEL (legacy) extension — no `_complete_b*` and no
-    * `_sentinels_enabled` convention marker — which the folds treat as
-    * all-complete (the pre-sentinel behavior). `Some(empty)` is an
-    * extension that follows the convention but holds no complete batch:
-    * a fold that CARRIED a partial batch writes the convention marker
-    * alongside it, so a second fold before the replay arrives cannot
-    * mistake the carried rows for a legacy all-complete extension and
-    * fold them after all.
-    */
-  private def sentineledBatches(spark: SparkSession,
-      extP: org.apache.hadoop.fs.Path): Option[Set[Long]] = {
-    val fs = extP.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(extP)) None
-    else {
-      val names = fs.listStatus(extP).iterator
-        .filter(_.isFile).map(_.getPath.getName).toSeq
-      val ids = names.filter(_.startsWith("_complete_b"))
-        .flatMap(n => scala.util.Try(
-          n.drop("_complete_b".length).toLong).toOption)
-        .toSet
-      if (ids.isEmpty && !names.contains("_sentinels_enabled")) None
-      else Some(ids)
-    }
-  }
-
-  /** Last micro-batch id a generation's FIT already folded in — written
-    * by a stream-triggered refit ([[writeIvfPqIndex]]'s `streamHighwater`)
-    * atomically with the generation.
-    */
-  private def streamHighwaterOf(spark: SparkSession, dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_stream_highwater")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try { in.readFully(0, buf); Some(new String(buf, "UTF-8").trim.toLong) }
-      finally in.close()
-    }
-  }
-
-  /** Streaming-grade append: encode `df` with the stored model (like
-    * [[appendToIvfPqIndex]]) into the `codes_stream` extension table,
-    * partitioned by `(batch_id, cell)` with dynamic partition overwrite —
-    * so an at-least-once REPLAY of the same micro-batch rewrites its own
-    * partitions instead of doubling rows (the `q_stream_incremental`
-    * idempotence pattern). A batch at or below the current generation's
-    * stream highwater is skipped entirely: a drift-triggered refit
-    * already folded it into the base fit (the watermark is written
-    * atomically with that generation), so replay-after-refit cannot
-    * duplicate either. Tombstone collisions compact first, like the
-    * batch append.
+  /** Replay-idempotent stream append of one micro-batch; true when the
+    * batch was dropped by the highwater gap guard
+    * ([[CodesStore.appendStream]]).
     */
   def appendStreamBatch(df: DataFrame, idCol: String, vecCol: String,
-                        path: String, batchId: Long): Boolean = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path,
-        owner = s"appendStreamBatch:b$batchId") {
-      val dir = AtomicStore.resolve(spark, path)
-      val hwSkip = streamHighwaterOf(spark, dir).filter(_ >= batchId)
-      if (hwSkip.isDefined) {
-        // a skip is only legitimate replay absorption when the replayed id
-        // is AT or just under the folded watermark. A LARGE gap means the
-        // stream restarted with a NEW checkpoint (batch ids reset to 0)
-        // against a store whose fit recorded a high watermark — silently
-        // dropping every batch until ids catch up is data loss, so say so
-        // loudly (the caller chose at-least-once semantics; failing here
-        // would wedge a legitimate replay, hence warn-not-throw) AND
-        // leave a MACHINE-READABLE record the stream owner can assert on
-        // ([[skippedStreamBatches]]) — a stderr line is not a signal
-        val hw = hwSkip.get
-        if (hw - batchId > 1L) {
-          System.err.println(s"[graft] appendStreamBatch: batch $batchId " +
-            s"skipped by stream highwater $hw at $path — a gap this large " +
-            "usually means the stream restarted with a FRESH checkpoint " +
-            "(batch ids reset) against an existing index; those batches are " +
-            "NOT being appended. Point the new stream at a new index, refit, " +
-            "or keep the original checkpoint directory. Recorded in " +
-            "_skipped_batches (see Similarity.skippedStreamBatches).")
-          recordSkippedBatch(spark, path, batchId, hw)
-          true // DROPPED — the caller may choose to fail fast
-        } else false // legitimate replay absorption, not data loss
-      } else {
-        val ids = df.select(col(idCol).as("cid")).distinct()
-        if (tombstonesOpt(spark, dir)
-              .exists(t => !t.join(ids, Seq("cid"), "left_semi").isEmpty))
-          compactIn(spark, dir)
-        val index = openIvfPqIndexIn(spark, dir)
-        encodeForIndex(index, df, idCol, vecCol)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cell")
-          .parquet(s"$dir/codes_stream")
-        writeBatchSentinel(spark, dir, batchId)
-        false
-      }
-    }
-  }
+                        path: String, batchId: Long): Boolean =
+    ivfPqStore.appendStream(df, idCol, vecCol, path, batchId)
 
-  /** Write the per-store record of a dropped stream batch (the fresh-
-    * checkpoint highwater gap) — one empty marker file per skip at the
-    * STORE ROOT (`_skipped_batches/b<id>_hw<hw>`), outside the generation
-    * directories so the record survives refits and folds and is never
-    * pruned by commits. Creation is idempotent (a replay of the skipped
-    * batch re-skips onto the same file name).
+  /** The dropped-batch ledger of a stream-maintained store, either codec
+    * ([[CodesStore.skippedBatches]]). A stream owner asserts it is empty.
     */
-  private def recordSkippedBatch(spark: SparkSession, path: String,
-                                 batchId: Long, highwater: Long): Unit = {
-    val dirP = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches")
-    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(dirP)
-    // BOUNDED ledger: a misconfigured fresh-checkpoint stream left
-    // running drops EVERY batch — per-batch markers for the first
-    // window keep the forensic detail, then a single overwritten
-    // `overflow` record tracks the latest drop (the signal is binary by
-    // then; an unbounded marker directory would itself become the
-    // metadata problem). The listing is one round-trip in a regime that
-    // is already an error path.
-    if (fs.listStatus(dirP).length < SkippedLedgerCap) {
-      val f = new org.apache.hadoop.fs.Path(
-        s"$path/_skipped_batches/b${batchId}_hw$highwater")
-      try fs.create(f, false).close()
-      catch { case _: java.io.IOException => () } // replayed skip: same record
-    } else {
-      val o = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches/overflow")
-      val out = fs.create(o, true)
-      try out.write(s"$batchId:$highwater".getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
+  def skippedStreamBatches(spark: SparkSession, path: String): DataFrame =
+    CodesStore.skippedBatches(spark, path)
 
-  /** Per-batch skip markers beyond this collapse into one `overflow`
-    * record — see [[recordSkippedBatch]].
-    */
-  private val SkippedLedgerCap = 512
-
-  /** The DROPPED-batch ledger of a stream-maintained store — one row
-    * `(batch_id, highwater)` per micro-batch the highwater gap guard
-    * refused (see [[appendStreamBatch]]'s fresh-checkpoint warning). A
-    * stream owner asserts this is EMPTY as part of its health checks; a
-    * non-empty ledger means a restarted-with-fresh-checkpoint stream is
-    * silently dropping data and the index needs a refit or a new path.
-    * Pure metadata (one directory listing), no scan.
-    */
-  def skippedStreamBatches(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val dirP = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches")
-    val fs = dirP.getFileSystem(spark.sessionState.newHadoopConf())
-    val names: Seq[String] =
-      if (!fs.exists(dirP)) Seq.empty
-      else fs.listStatus(dirP).toSeq.map(_.getPath.getName)
-    val itemized = names.collect {
-      case s if s.startsWith("b") && s.contains("_hw") =>
-        val Array(b, hw) = s.drop(1).split("_hw", 2)
-        (b.toLong, hw.toLong)
-    }
-    // past the cap the latest drop lives in the single overflow record
-    val overflow = if (!names.contains("overflow")) Seq.empty else {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_skipped_batches/overflow")
-      val len = fs.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = fs.open(p)
-      try in.readFully(0, buf) finally in.close()
-      new String(buf, "UTF-8").trim.split(":", 2) match {
-        case Array(b, hw) => Seq((b.toLong, hw.toLong))
-        case _ => Seq.empty
-      }
-    }
-    (itemized ++ overflow).distinct.sorted.toDF("batch_id", "highwater")
-  }
-
-  /** Fold accumulated tombstones into the codes layout: rewrite ONLY the
-    * cell partitions that actually contain a tombstoned id (dynamic
-    * partition overwrite — untouched cells keep their original files),
-    * then drop the tombstones table. Serving before and after compaction
-    * is bit-identical by construction; compaction just reclaims the dead
-    * rows and re-arms [[deleteFromIvfPqIndex]] for id reuse.
-    *
-    * The affected-cell list collects to the driver — bounded by nlist,
-    * same size class as the centroid table.
-    */
+  /** Reclaim tombstoned rows in place ([[CodesStore.compact]]). */
   def compactIvfPqIndex(spark: SparkSession, path: String): Unit =
-    AtomicStore.withMutationLease(spark, path, owner = "compactIvfPqIndex") {
-      compactIn(spark, AtomicStore.resolve(spark, path))
-    }
+    ivfPqStore.compact(spark, path)
 
-  /** [[compactIvfPqIndex]] inside an already-resolved generation
-    * directory. Crash-safe without a new generation: rewritten cells
-    * already exclude the dead rows, and the tombstones are only dropped
-    * LAST — a crash at any interior point leaves the anti-join still
-    * masking them, so reads before/during/after are identical.
-    *
-    * BOTH physical tables the live view unions are rewritten: the base
-    * `codes` AND the stream extension `codes_stream` (when present). A
-    * tombstoned id whose rows arrived via [[appendStreamBatch]] lives
-    * only in the extension — rewriting the base alone and then dropping
-    * the tombstones would resurrect it (the anti-join mask disappears
-    * while its physical rows survive).
-    */
-  private def compactIn(spark: SparkSession, dir: String): Unit =
-    tombstonesOpt(spark, dir).foreach { tomb =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val base = spark.read.parquet(s"$dir/codes")
-      compactTable(spark, fs, s"$dir/codes", Seq("cell"), tomb, base)
-      // the stream leg reads via readStreamExt (explicit schema), never
-      // inference: an extension directory with no committed data files —
-      // every partition deleted by an EARLIER tombstone compaction, or a
-      // crashed first append's lone `_temporary/` — must read as empty,
-      // not throw "Unable to infer schema" and brick every later
-      // delete/compact/auto-compacting append on the store
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes_stream")))
-        compactTable(spark, fs, s"$dir/codes_stream",
-          Seq("batch_id", "cell"), tomb,
-          readStreamExt(spark, s"$dir/codes_stream", base.schema),
-          allowEmpty = true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-    }
-
-  /** Rewrite ONLY the partitions of one codes table that contain a
-    * tombstoned id (dynamic partition overwrite — untouched partitions
-    * keep their original files); a partition whose every row was
-    * tombstoned is dropped directly (dynamic overwrite never visits it).
-    */
-  private def compactTable(spark: SparkSession,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           table: String, partCols: Seq[String],
-                           tomb: DataFrame, codes: DataFrame,
-                           idJoin: String = "cid",
-                           allowEmpty: Boolean = false): Unit = {
-    def partPath(vals: Seq[Any]): String =
-      partCols.zip(vals).map { case (c, v) => s"$c=$v" }.mkString("/")
-    val affected = codes.join(tomb, Seq(idJoin), "left_semi")
-      .select(partCols.map(col): _*).distinct().collect()
-      .map(r => partCols.indices.map(r.get))
-    if (affected.nonEmpty) {
-      // survivors of the affected partitions only; staged through a temp
-      // dir because Spark refuses to overwrite a path it is reading from
-      val tmp = s"$table${CompactTmpSuffix}"
-      val hit = affected.map(partPath).toSet
-      // OR-of-equalities over the partition columns: partition pruning
-      // handles equality disjunctions, so only the affected partition
-      // directories are read. BOUNDED: past a few hundred terms the
-      // left-nested Or tree costs Catalyst more than the pruning saves
-      // (and codegen has a 64KB method limit) — and a tombstone set
-      // touching thousands of partitions is going to rewrite most of the
-      // table anyway, so fall back to a broadcast semi-join against the
-      // affected tuples (full scan, bounded plan).
-      val affectedHit =
-        if (affected.size <= CompactPredicateMaxTerms)
-          codes.where(affected.map { vals =>
-            partCols.zip(vals).map { case (c, v) => col(c) === lit(v) }
-              .reduce(_ && _)
-          }.reduce(_ || _))
-        else {
-          import spark.implicits._
-          val tuples = affected.map(vals =>
-            partCols.zip(vals).map { case (c, v) => s"$c=$v" }.mkString("/"))
-            .toSeq.toDF("__part")
-          codes.withColumn("__part", concat_ws("/",
-              partCols.map(c => concat(lit(c + "="), col(c).cast("string"))): _*))
-            .join(broadcast(tuples), Seq("__part"), "left_semi")
-            .drop("__part")
-        }
-      val survivors = affectedHit.join(tomb, Seq(idJoin), "left_anti")
-      survivors.write.mode("overwrite").partitionBy(partCols: _*).parquet(tmp)
-      // an empty partitioned write emits no data files, so the staged
-      // read needs the survivors' schema handed to it explicitly — and
-      // with zero survivors the dynamic overwrite is a no-op anyway
-      val staged = spark.read.schema(survivors.schema).parquet(tmp)
-      val stillThere = staged.select(partCols.map(col): _*).distinct()
-        .collect().map(r => partPath(partCols.indices.map(r.get))).toSet
-      // a BASE codes table must never end up data-free: its schema is
-      // only recoverable from its own files, so deleting the last data
-      // file bricks every later open/serve/compact on failed schema
-      // inference. A 100%-tombstoned corpus is a store drop, not a
-      // compaction — refuse loudly (the mask already serves zero rows,
-      // nothing is lost by leaving the dead files until the operator
-      // drops or refits the store). Stream extensions pass allowEmpty:
-      // they are read with an explicit schema and removed when empty.
-      if (!allowEmpty && stillThere.isEmpty) {
-        val total = codes.select(partCols.map(col): _*).distinct().count()
-        if (total == affected.length) {
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-          throw new IllegalStateException(
-            s"compacting $table would delete its LAST data file (every " +
-              "remaining row is tombstoned). Serving already returns " +
-              "nothing under the tombstone mask; drop the store directory " +
-              "or refit it instead of compacting an all-deleted corpus.")
-        }
-      }
-      if (stillThere.nonEmpty)
-        staged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partCols: _*).parquet(table)
-      hit.filterNot(stillThere).foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$table/$p"), true)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
-  }
-
-  private val CompactTmpSuffix = "_compact_tmp"
-
-  /** Affected-partition count above which [[compactTable]] switches from
-    * the prunable OR-of-equalities filter to a broadcast semi-join (see
-    * inline note); test-visible so the join leg is exercised at small
-    * sizes.
-    */
-  private[graft] var CompactPredicateMaxTerms = 256
-
-  /** Fold the stream extension into the base codes table, in a FRESH
-    * generation — the small-file compaction a long-running
-    * [[appendStreamBatch]] ingestion needs: the extension keeps one
-    * `(batch_id, cell)` partition directory per micro-batch × cell (the
-    * price of idempotent replay), so months of micro-batches leave
-    * thousands of tiny files and the serve-time union goes
-    * metadata-bound. No model work is redone: meta, centroids, codebooks
-    * and the fit-time `cellstats` snapshot are copied verbatim (the
-    * drift baseline must stay the FIT's occupancy), tombstones are
-    * folded first ([[compactIn]]), the merged live rows are rewritten
-    * cell-partitioned, and the new generation's stream highwater is
-    * raised to the highest folded batch id — so an at-least-once replay
-    * of any folded batch is absorbed exactly as after a refit. Published
-    * with the same crash-atomic marker commit: a killed compaction
-    * leaves readers on the old generation.
-    *
-    * Serving, drift, and replay semantics are bit-identical before and
-    * after; only the file layout (and the absence of the union branch)
-    * changes. Returns false when there is no extension to fold.
+  /** Fold the stream extension into base codes in a fresh generation;
+    * `cellstats` is copied, so the drift baseline stays the fit's
+    * ([[CodesStore.fold]]).
     */
   def compactIvfPqStreamExtension(spark: SparkSession, path: String): Boolean =
-    AtomicStore.withMutationLease(spark, path,
-      owner = "compactIvfPqStreamExtension") {
-      compactIvfPqStreamExtensionIn(spark, path)
-    }
-
-  private def compactIvfPqStreamExtensionIn(spark: SparkSession,
-                                            path: String): Boolean = {
-    val dir = AtomicStore.resolve(spark, path)
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val extFs = extP.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!extFs.exists(extP)) return false
-    compactIn(spark, dir) // fold tombstones into BOTH tables first
-    // a data-free extension (every streamed row tombstone-compacted
-    // away) has nothing to fold — remove the empty directory so later
-    // opens skip the union branch entirely
-    val base = spark.read.parquet(s"$dir/codes")
-    val extRows = readStreamExt(spark, extP.toString, base.schema)
-    if (extRows.isEmpty) { extFs.delete(extP, true); return false }
-    val maxBatch = extRows
-      .agg(max(col("batch_id").cast("long"))).head().getLong(0)
-    // completion boundary: only batches whose parquet job COMMITTED (the
-    // append's `_complete_b<N>` sentinel) fold and raise the highwater. A
-    // batch killed mid-write — even mid-commit, which leaves partial data
-    // files — has no sentinel: its rows are CARRIED into the fresh
-    // generation's extension untouched, so the at-least-once replay still
-    // finds batch_id partitions to rewrite instead of being absorbed by a
-    // highwater that covered half a batch. A pre-sentinel extension
-    // (no markers at all) folds whole, as before.
-    val maxComplete =
-      sentineledBatches(spark, extP).fold(maxBatch)(_.foldLeft(-1L)(math.max))
-    val hw = math.max(streamHighwaterOf(spark, dir).getOrElse(-1L), maxComplete)
-    val foldable =
-      extRows.where(col("batch_id").cast("long") <= lit(maxComplete))
-    val carry =
-      extRows.where(col("batch_id").cast("long") > lit(maxComplete))
-    // tombstones were folded by compactIn above, so live = base ∪ foldable
-    val merged = base.unionByName(
-      foldable.select(base.columns.toIndexedSeq.map(col): _*))
-    val (gen, gdir) = AtomicStore.begin(spark, path)
-    AtomicStore.failpoint("ivfpq:meta")
-    Seq("meta", "centroids", "codebooks", "cellstats").foreach { t =>
-      spark.read.parquet(s"$dir/$t").write.mode("overwrite").parquet(s"$gdir/$t")
-    }
-    AtomicStore.failpoint("ivfpq:codes")
-    merged.write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    if (maxComplete < maxBatch) {
-      carry.write.mode("overwrite").partitionBy("batch_id", "cell")
-        .parquet(s"$gdir/codes_stream")
-      // convention marker: the carried extension has no sentinels of its
-      // own — without this a second fold would misread it as legacy
-      extFs.create(new org.apache.hadoop.fs.Path(
-        s"$gdir/codes_stream/_sentinels_enabled"), true).close()
-    }
-    writeStreamHighwater(spark, gdir, Some(hw))
-    AtomicStore.commit(spark, path, gen)
-    invalidateIndexModel(path)
-    true
-  }
+    ivfPqStore.fold(spark, path)
 
   /** Staleness signal: per-cell LIVE occupancy (appends minus tombstoned
     * deletes) vs the fit-time snapshot, plus the growth ratio. A cell
@@ -1594,7 +1125,7 @@ object Similarity {
   def ivfPqCellDrift(spark: SparkSession, path: String): DataFrame = {
     val dir = AtomicStore.resolve(spark, path)
     val fit = spark.read.parquet(s"$dir/cellstats")
-    val now = liveCodes(spark, dir)
+    val now = ivfPqStore.live(spark, dir)
       .groupBy(col("cell")).agg(count(lit(1)).as("n_now"))
     fit.join(now, Seq("cell"), "full")
       .select(col("cell"),
@@ -1604,107 +1135,20 @@ object Similarity {
         (col("n_now") - col("n_fit")) / greatest(col("n_fit"), lit(1L)))
   }
 
-  /** Drift-triggered refit — the last arc of the index lifecycle
-    * (fit → serve → append → delete → compact → drift → REFIT). When the
-    * staleness signal ([[ivfPqCellDrift]]) reports a cell whose |growth|
-    * meets `threshold`, the coarse quantizer and codebooks are refit from
-    * the CURRENT corpus `df` (the index is derived state; the embedding
-    * table is the source of truth — the data-lake shape, not a
-    * reconstruct-from-codes hack) and every cell is rewritten via
-    * [[writeIvfPqIndex]] with the persisted meta params, so a refit index
-    * is bit-identical to one fit fresh on today's corpus with the same
-    * seed. Accumulated tombstones are dropped: the rewrite IS the
-    * compaction. Returns whether a refit happened — below the threshold
-    * the store is untouched (the cheap steady-state probe).
+  /** Drift-triggered refit from the current corpus `df` once some cell's
+    * |growth| ([[ivfPqCellDrift]]) reaches `threshold`, with the persisted
+    * meta params ([[CodesStore.refit]]). Returns whether it refit.
     */
   def refitIvfPqIndex(df: DataFrame, idCol: String, vecCol: String,
                       path: String, threshold: Double = 0.5,
                       streamHighwater: Option[Long] = None): Boolean =
-    AtomicStore.withMutationLease(df.sparkSession, path,
-        owner = "refitIvfPqIndex") {
-      val spark = df.sparkSession
-      val worst = ivfPqCellDrift(spark, path)
-        .agg(max(abs(col("growth")))).head().getDouble(0)
-      if (worst < threshold) false
-      else {
-        val meta = spark.read
-          .parquet(s"${AtomicStore.resolve(spark, path)}/meta").head()
-        writeIvfPqIndex(df, idCol, vecCol, path,
-          dim = meta.getAs[Int]("dim"),
-          nlist = meta.getAs[Int]("nlist"),
-          m = meta.getAs[Int]("m"),
-          codebookSize = meta.getAs[Int]("codebook_size"),
-          seed = meta.getAs[Long]("seed"),
-          residual = meta.getAs[Boolean]("residual"),
-          streamHighwater = streamHighwater)
-        // (the refit commits a FRESH generation, which starts with no
-        // tombstones — a refit defines the whole store)
-        true
-      }
-    }
+    ivfPqStore.refit(df, idCol, vecCol, path, threshold, streamHighwater)
 
-  /** Per-JVM cache of opened index MODELS (centroids/codebooks/params):
-    * a server loads the model once and serves many batches — re-collecting
-    * three parquet tables per query benchmarks the open path, not serving.
-    * Keyed by the GENERATION directory, which is immutable once committed
-    * (a refit publishes a NEW generation — `AtomicStore`), so an entry can
-    * never go stale: an out-of-process refit changes what
-    * [[openIvfPqIndex]] resolves to, which is a different cache key.
-    * Append/delete/compact touch only the codes/tombstones, which stay
-    * lazy per call.
-    */
-  private val indexModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], Int, Int, Boolean,
-      org.apache.spark.sql.types.StructType)]
-
-  /** Drop any cached model generations under `path` — belt-and-braces
-    * bound on the cache (generation keys expire naturally; this frees
-    * them eagerly after an in-process rewrite).
-    */
-  def invalidateIndexModel(path: String): Unit = {
-    indexModelCache.keys
-      .filter(k => k == path || k.startsWith(path + "/"))
-      .foreach(indexModelCache.remove)
-  }
-
-  /** Open a persisted index: the model tables collect to the driver
-    * (nlist + m·k rows — a few KB, the same size class the direct path
-    * inlines as expression literals) and are cached per JVM (see
-    * [[indexModelCache]]); the codes table stays a lazy, partition-pruned
-    * DataFrame — the LIVE view, i.e. tombstoned ids from
-    * [[deleteFromIvfPqIndex]] are already excluded.
+  /** Open a persisted index: the model is cached per JVM and generation;
+    * the codes are the lazy, cell-pruned live view ([[CodesStore.open]]).
     */
   def openIvfPqIndex(spark: SparkSession, path: String): IvfPqIndex =
-    // hot serve path: TTL-cached resolution (safe by generation
-    // retention — see AtomicStore.resolveCached)
-    openIvfPqIndexIn(spark, AtomicStore.resolveCached(spark, path))
-
-  /** [[openIvfPqIndex]] with the generation directory already resolved —
-    * the mutation paths resolve once and reuse it.
-    */
-  private def openIvfPqIndexIn(spark: SparkSession, dir: String): IvfPqIndex = {
-    val (cents, books, dim, m, residual, codesSchema) =
-      indexModelCache.getOrElseUpdate(dir, {
-        val meta = spark.read.parquet(s"$dir/meta").head()
-        val mm = meta.getAs[Int]("m")
-        val cs = spark.read.parquet(s"$dir/centroids")
-          .orderBy("cell").collect()
-          .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
-        val booksFlat = spark.read.parquet(s"$dir/codebooks")
-          .orderBy("j", "c").collect()
-          .map(r => (r.getAs[Int]("j"), r.getSeq[Double](r.fieldIndex("vec"))))
-        val bs = (0 until mm).map(j =>
-          booksFlat.filter(_._1 == j).map(_._2).toSeq).toSeq
-        // the codes schema rides in the model cache: append/delete/compact
-        // preserve it (same encoder, same partition layout), so later
-        // serves skip the per-open schema-inference job
-        val codesSchema = spark.read.parquet(s"$dir/codes").schema
-        (cs, bs, meta.getAs[Int]("dim"), mm,
-          meta.getAs[Boolean]("residual"), codesSchema)
-      })
-    IvfPqIndex(cents, books, dim, m, residual,
-      liveCodes(spark, dir, Some(codesSchema)))
-  }
+    ivfPqStore.open(spark, path)
 
   /** Answer a query batch from a persisted index — no codebook fit, no
     * corpus re-encode, no corpus vector reads: the plan is the probe-side
@@ -1723,20 +1167,40 @@ object Similarity {
     scoreAssignedCells(index.codes, index.cents, index.books, index.residual,
       queryDf, idCol, vecCol, k, nprobe, index.m, index.dim / index.m)
 
-  // ---------------------------------------------------------------- //
-  // Persisted SQ×IVF index — the int8 tier's fit-once/serve-many      //
-  // store (r14 shipped the in-memory split; without a store a server  //
-  // restart re-encoded the corpus). Same lifecycle shape as IVF-PQ:   //
-  // a driver-held model (centroids only — SQ needs no codebooks, its  //
-  // scale is the fixed constant 1/127) plus a cell-partitioned codes  //
-  // table, opened through a per-JVM model cache.                      //
-  // ---------------------------------------------------------------- //
-
   /** An opened on-disk SQ×IVF index: the coarse centroids (nlist × dim
     * doubles, driver-held like the literals the direct path inlines) and
-    * the lazy cell-partitioned `(id, c8)` codes table.
+    * the lazy live codes table `(id, cell, c8)`. SQ needs no codebooks:
+    * its scale is the fixed constant 1/127.
     */
   case class SqIvfIndex(cents: Seq[Seq[Double]], dim: Int, codes: DataFrame)
+
+  /** The SQ×IVF store: `id` ids; model tables `meta` and `centroids`;
+    * refit on the stream extension's share ([[sqIvfStreamGrowth]]).
+    */
+  private[graft] val sqIvfStore = new CodesStore(new CodesCodec[SqIvfIndex] {
+    val name = "SqIvf"
+    val label = "sqivf"
+    val idCol = "id"
+    val modelTables = Seq("meta", "centroids")
+    def load(spark: SparkSession, dir: String): DataFrame => SqIvfIndex = {
+      val cents = readCentroids(spark, dir)
+      val dim = spark.read.parquet(s"$dir/meta").head().getAs[Int]("dim")
+      codes => SqIvfIndex(cents, dim, codes)
+    }
+    def encode(index: SqIvfIndex, df: DataFrame, idCol: String,
+               vecCol: String): DataFrame =
+      sqIvfEncode(df, idCol, vecCol, index.cents)
+    def staleness(spark: SparkSession, path: String): Double =
+      sqIvfStreamGrowth(spark, path)
+    def refit(df: DataFrame, idCol: String, vecCol: String, path: String,
+              meta: Row, streamHighwater: Option[Long]): Unit =
+      writeSqIvfIndex(df, idCol, vecCol, path,
+        dim = meta.getAs[Int]("dim"),
+        nlist = meta.getAs[Int]("nlist"),
+        seed = meta.getAs[Long]("seed"),
+        iters = meta.getAs[Int]("iters"),
+        streamHighwater = streamHighwater)
+  })
 
   /** Fit an SQ×IVF index on `df` and persist it under `path`: `meta`
     * (one row of params), `centroids` (nlist rows) and `codes` — one
@@ -1754,315 +1218,70 @@ object Similarity {
     import spark.implicits._
     val cents = pqCodebooks(df, vecCol, dim, m = 1, codebookSize = nlist,
       seed = seed, iters = iters, normalizeInput = false).head
-    // same crash-atomic generation publish as [[writeIvfPqIndex]]
-    val (gen, gdir) = AtomicStore.begin(spark, path)
-    AtomicStore.failpoint("sqivf:meta")
-    Seq((dim, nlist, seed, iters)).toDF("dim", "nlist", "seed", "iters")
-      .write.mode("overwrite").parquet(s"$gdir/meta")
-    AtomicStore.failpoint("sqivf:centroids")
-    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "vec")
-      .write.mode("overwrite").parquet(s"$gdir/centroids")
-    AtomicStore.failpoint("sqivf:codes")
-    sqIvfEncode(df, idCol, vecCol, cents)
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    // same stream-watermark contract as [[writeIvfPqIndex]]: the last
-    // FOLDED micro-batch id lands inside the generation, atomic with the
-    // fit; a non-stream fit scrubs any stale one from a reused directory
-    writeStreamHighwater(spark, gdir, streamHighwater)
-    AtomicStore.commit(spark, path, gen)
-    invalidateSqIvfModel(path)
+    sqIvfStore.publish(spark, path, streamHighwater)(
+      ("meta", _ => Seq((dim, nlist, seed, iters))
+        .toDF("dim", "nlist", "seed", "iters")),
+      ("centroids", _ => centroidTable(spark, cents)),
+      ("codes", _ => sqIvfEncode(df, idCol, vecCol, cents)))
   }
 
-  /** Write (or scrub) a generation directory's `_stream_highwater` —
-    * shared by the IVF-PQ and SQ×IVF fit paths; see [[writeIvfPqIndex]]'s
-    * inline doc for the atomicity argument.
-    */
-  private def writeStreamHighwater(spark: SparkSession, gdir: String,
-                                   streamHighwater: Option[Long]): Unit = {
-    val hwPath = new org.apache.hadoop.fs.Path(s"$gdir/_stream_highwater")
-    val hwFs = hwPath.getFileSystem(spark.sessionState.newHadoopConf())
-    streamHighwater match {
-      case Some(hw) =>
-        val out = hwFs.create(hwPath, true)
-        try out.write(hw.toString.getBytes("UTF-8")) finally out.close()
-      case None =>
-        if (hwFs.exists(hwPath)) { hwFs.delete(hwPath, false); () }
-    }
-  }
-
-  /** Append new vectors: encode with the STORED centroids (no refit —
-    * existing codes stay valid) into the same cell-partitioned layout.
-    * Caller owns id-uniqueness, like [[appendToIvfPqIndex]].
-    */
+  /** [[appendToIvfPqIndex]] on the int8 store ([[CodesStore.append]]). */
   def appendToSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-                         path: String): Unit = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path, owner = "appendToSqIvfIndex") {
-      val dir = AtomicStore.resolve(spark, path)
-      // delete→re-add is an upsert, like [[appendToIvfPqIndex]]: an id
-      // colliding with a tombstone compacts first so only the new row serves
-      val ids = df.select(col(idCol).as("id")).distinct()
-      if (tombstonesOpt(spark, dir)
-            .exists(t => !t.join(ids, Seq("id"), "left_semi").isEmpty))
-        sqCompactIn(spark, dir)
-      val index = openSqIvfIndexIn(spark, dir)
-      sqIvfEncode(df, idCol, vecCol, index.cents)
-        .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-    }
-  }
+                         path: String): Unit =
+    sqIvfStore.append(df, idCol, vecCol, path)
 
-  /** Delete vectors from a persisted SQ×IVF index by id — the
-    * [[deleteFromIvfPqIndex]] contract on the int8 store: ids append to a
-    * `tombstones` table (cheap regardless of corpus size),
-    * [[openSqIvfIndex]] anti-joins the codes so serving sees only live
-    * vectors immediately, and the dead rows stay on disk until
-    * [[compactSqIvfIndex]] rewrites their cells. Same tombstone caveats
-    * (compact before re-add — [[appendToSqIvfIndex]] does it
-    * automatically on collision) and the same single-writer discipline
-    * for deletes vs a live [[appendSqIvfStreamBatch]] stream.
-    */
+  /** [[deleteFromIvfPqIndex]] on the int8 store ([[CodesStore.delete]]). */
   def deleteFromSqIvfIndex(ids: DataFrame, idCol: String, path: String): Unit =
-    AtomicStore.withMutationLease(ids.sparkSession, path,
-        owner = "deleteFromSqIvfIndex") {
-      ids.select(col(idCol).as("id")).distinct()
-        .write.mode("append").parquet(
-          s"${AtomicStore.resolve(ids.sparkSession, path)}/tombstones")
-    }
+    sqIvfStore.delete(ids, idCol, path)
 
-  /** Fold accumulated SQ×IVF tombstones into the codes layout — the
-    * [[compactIvfPqIndex]] twin: rewrite only the cell partitions holding
-    * a tombstoned id (both the base `codes` AND the `codes_stream`
-    * extension — a streamed-in dead row must not resurrect when the mask
-    * drops), then drop the tombstones table. Serving before and after is
-    * bit-identical by construction.
-    */
+  /** [[compactIvfPqIndex]] on the int8 store ([[CodesStore.compact]]). */
   def compactSqIvfIndex(spark: SparkSession, path: String): Unit =
-    AtomicStore.withMutationLease(spark, path, owner = "compactSqIvfIndex") {
-      sqCompactIn(spark, AtomicStore.resolve(spark, path))
-    }
+    sqIvfStore.compact(spark, path)
 
-  private def sqCompactIn(spark: SparkSession, dir: String): Unit =
-    tombstonesOpt(spark, dir).foreach { tomb =>
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      val base = spark.read.parquet(s"$dir/codes")
-      compactTable(spark, fs, s"$dir/codes", Seq("cell"), tomb, base,
-        idJoin = "id")
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/codes_stream")))
-        compactTable(spark, fs, s"$dir/codes_stream",
-          Seq("batch_id", "cell"), tomb,
-          readStreamExt(spark, s"$dir/codes_stream", base.schema),
-          idJoin = "id", allowEmpty = true)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-    }
-
-  /** Streaming-grade SQ×IVF append — [[appendStreamBatch]]'s exact
-    * contract on the int8 store: encode with the STORED centroids into
-    * the `codes_stream` extension, partitioned `(batch_id, cell)` with
-    * dynamic partition overwrite (an at-least-once replay rewrites its
-    * own partitions), and skip batches at or below the generation's
-    * stream highwater (a refit already folded them, atomically).
-    */
+  /** [[appendStreamBatch]] on the int8 store ([[CodesStore.appendStream]]). */
   def appendSqIvfStreamBatch(df: DataFrame, idCol: String, vecCol: String,
-                             path: String, batchId: Long): Boolean = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path,
-        owner = s"appendSqIvfStreamBatch:b$batchId") {
-      val dir = AtomicStore.resolve(spark, path)
-      val hwSkip = streamHighwaterOf(spark, dir).filter(_ >= batchId)
-      if (hwSkip.isDefined) {
-        if (hwSkip.get - batchId > 1L) {
-          System.err.println(s"[graft] appendSqIvfStreamBatch: batch " +
-            s"$batchId skipped by stream highwater ${hwSkip.get} at $path " +
-            "— see appendStreamBatch's fresh-checkpoint warning; these " +
-            "batches are NOT being appended. Recorded in _skipped_batches.")
-          recordSkippedBatch(spark, path, batchId, hwSkip.get)
-          true // DROPPED — the caller may choose to fail fast
-        } else false
-      } else {
-        // tombstone collisions compact first, like the batch append
-        val ids = df.select(col(idCol).as("id")).distinct()
-        if (tombstonesOpt(spark, dir)
-              .exists(t => !t.join(ids, Seq("id"), "left_semi").isEmpty))
-          sqCompactIn(spark, dir)
-        val index = openSqIvfIndexIn(spark, dir)
-        sqIvfEncode(df, idCol, vecCol, index.cents)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "cell")
-          .parquet(s"$dir/codes_stream")
-        writeBatchSentinel(spark, dir, batchId)
-        false
-      }
-    }
-  }
+                             path: String, batchId: Long): Boolean =
+    sqIvfStore.appendStream(df, idCol, vecCol, path, batchId)
 
-  /** Staleness signal for the SQ×IVF store: the stream extension's share
-    * of the index (`streamed / fitted` row counts). The SQ fit has no
-    * per-cell codebooks to drift, but streamed vectors are still binned
-    * by centroids fit on the OLD distribution — past a deployment's
-    * tolerance the coarse balance degrades and a refit re-fits the cells
-    * over the full current corpus. Parquet row counts come from footer
-    * metadata; the probe is a metadata round-trip, not a scan.
+  /** Fragmentation signal of a stream-maintained store, either codec: the
+    * number of first-level `batch_id=…` partition directories in the
+    * `codes_stream` extension (one survives per unfolded micro-batch; the
+    * per-cell fan-out below them scales with it). The metadata-bound
+    * regime SCALE.md measures sets in as this grows, so the stream
+    * drivers' DEFAULT-ON fold triggers on it — unlike a batch counter, it
+    * self-corrects when a refit resets the layout. One `listStatus` of
+    * the extension root.
     */
-  /** Fragmentation signal of a stream-maintained store: the number of
-    * first-level `batch_id=…` partition directories in the `codes_stream`
-    * extension (one survives per un-folded micro-batch; the per-cell
-    * fan-out below them scales with it). The metadata-bound regime
-    * SCALE.md measures sets in as this grows, so the stream drivers'
-    * DEFAULT-ON fold triggers on it — unlike a batch counter, it
-    * self-corrects when a drift refit resets the layout invisibly. One
-    * `listStatus` of the extension root; works for both the IVF-PQ and
-    * SQ×IVF stores (same extension layout).
+  def streamExtensionDirCount(spark: SparkSession, path: String): Int =
+    CodesStore.extensionDirCount(spark, path)
+
+  /** Staleness signal of the SQ×IVF store: the stream extension's share
+    * of the index (`streamed / fitted` row counts, 0 with no extension).
+    * The SQ fit has no per-cell codebooks to drift, but streamed vectors
+    * are still binned by centroids fit on the OLD distribution — past a
+    * deployment's tolerance the coarse balance degrades and a refit
+    * re-fits the cells over the full current corpus. Cost: two `count()`
+    * jobs, one per table; parquet answers a column-less count from its
+    * footers, so neither reads the codes.
     */
-  def streamExtensionDirCount(spark: SparkSession, path: String): Int = {
-    val dir = AtomicStore.resolve(spark, path)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) 0 else fs.listStatus(p).count(_.isDirectory)
-  }
+  def sqIvfStreamGrowth(spark: SparkSession, path: String): Double =
+    CodesStore.streamShare(spark, path)
 
-  def sqIvfStreamGrowth(spark: SparkSession, path: String): Double = {
-    val dir = AtomicStore.resolve(spark, path)
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    if (!extP.getFileSystem(spark.sessionState.newHadoopConf()).exists(extP)) 0.0
-    else {
-      val base = spark.read.parquet(s"$dir/codes")
-      val streamed = readStreamExt(spark, extP.toString, base.schema).count()
-      streamed.toDouble / math.max(base.count(), 1L)
-    }
-  }
-
-  /** Growth-triggered SQ×IVF refit — the [[refitIvfPqIndex]] arc on the
-    * int8 store: when the stream extension's share reaches `threshold`,
-    * refit from the CURRENT corpus `df` with the persisted meta params
-    * (bit-identical to a fresh fit on today's corpus with the same seed,
-    * and the fresh generation starts with no extension). Returns whether
-    * a refit happened.
+  /** Growth-triggered refit from the current corpus `df` once
+    * [[sqIvfStreamGrowth]] reaches `threshold` ([[CodesStore.refit]]).
     */
   def refitSqIvfIndex(df: DataFrame, idCol: String, vecCol: String,
                       path: String, threshold: Double = 0.5,
-                      streamHighwater: Option[Long] = None): Boolean = {
-    val spark = df.sparkSession
-    AtomicStore.withMutationLease(spark, path, owner = "refitSqIvfIndex") {
-      if (sqIvfStreamGrowth(spark, path) < threshold) false
-      else {
-        val meta = spark.read
-          .parquet(s"${AtomicStore.resolve(spark, path)}/meta").head()
-        writeSqIvfIndex(df, idCol, vecCol, path,
-          dim = meta.getAs[Int]("dim"),
-          nlist = meta.getAs[Int]("nlist"),
-          seed = meta.getAs[Long]("seed"),
-          iters = meta.getAs[Int]("iters"),
-          streamHighwater = streamHighwater)
-        true
-      }
-    }
-  }
+                      streamHighwater: Option[Long] = None): Boolean =
+    sqIvfStore.refit(df, idCol, vecCol, path, threshold, streamHighwater)
 
-  /** Per-JVM cache of opened SQ×IVF models (centroids + codes schema) —
-    * same serve-many rationale as [[indexModelCache]], and keyed by the
-    * immutable generation directory for the same staleness-proof reason.
-    */
-  private val sqIvfModelCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[Seq[Double]], Int,
-      org.apache.spark.sql.types.StructType)]
-
-  def invalidateSqIvfModel(path: String): Unit = {
-    sqIvfModelCache.keys
-      .filter(k => k == path || k.startsWith(path + "/"))
-      .foreach(sqIvfModelCache.remove)
-  }
-
-  /** Open a persisted SQ×IVF index: the centroid table collects to the
-    * driver (nlist rows) and is cached per JVM; the codes table stays a
-    * lazy partition-pruned DataFrame.
-    */
+  /** [[openIvfPqIndex]] on the int8 store ([[CodesStore.open]]). */
   def openSqIvfIndex(spark: SparkSession, path: String): SqIvfIndex =
-    openSqIvfIndexIn(spark, AtomicStore.resolveCached(spark, path))
+    sqIvfStore.open(spark, path)
 
-  private def openSqIvfIndexIn(spark: SparkSession, dir: String): SqIvfIndex = {
-    val (cents, dim, codesSchema) = sqIvfModelCache.getOrElseUpdate(dir, {
-      val meta = spark.read.parquet(s"$dir/meta").head()
-      val cs = spark.read.parquet(s"$dir/centroids")
-        .orderBy("cell").collect()
-        .map(r => r.getSeq[Double](r.fieldIndex("vec"))).toSeq
-      (cs, meta.getAs[Int]("dim"), spark.read.parquet(s"$dir/codes").schema)
-    })
-    val base = spark.read.schema(codesSchema).parquet(s"$dir/codes")
-    // stream-grown extension ([[appendSqIvfStreamBatch]]): same (id, c8,
-    // cell) rows, additionally partitioned by batch_id for idempotent
-    // replay — union preserves cell partition pruning on both sides
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val codes0 =
-      if (extP.getFileSystem(spark.sessionState.newHadoopConf()).exists(extP))
-        base.unionByName(readStreamExt(spark, extP.toString, base.schema)
-          .select(base.columns.toIndexedSeq.map(col): _*))
-      else base
-    // live view: tombstoned ids ([[deleteFromSqIvfIndex]]) excluded, the
-    // same anti-join mask as [[liveCodes]] on the IVF-PQ store
-    val codes = tombstonesOpt(spark, dir)
-      .map(t => codes0.join(t, Seq("id"), "left_anti")).getOrElse(codes0)
-    SqIvfIndex(cents, dim, codes)
-  }
-
-  /** [[compactIvfPqStreamExtension]] on the SQ×IVF store — same fold,
-    * simpler tables (no codebooks, no cellstats): tombstones fold first
-    * ([[sqCompactIn]]), meta and centroids copy verbatim, base ∪
-    * extension rewrites cell-partitioned in a fresh generation whose
-    * stream highwater rises to the highest folded batch id. Returns
-    * false when there is no extension to fold.
-    */
+  /** [[compactIvfPqStreamExtension]] on the int8 store ([[CodesStore.fold]]). */
   def compactSqIvfStreamExtension(spark: SparkSession, path: String): Boolean =
-    AtomicStore.withMutationLease(spark, path,
-      owner = "compactSqIvfStreamExtension") {
-      compactSqIvfStreamExtensionIn(spark, path)
-    }
-
-  private def compactSqIvfStreamExtensionIn(spark: SparkSession,
-                                            path: String): Boolean = {
-    val dir = AtomicStore.resolve(spark, path)
-    val extP = new org.apache.hadoop.fs.Path(s"$dir/codes_stream")
-    val extFs = extP.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!extFs.exists(extP)) return false
-    sqCompactIn(spark, dir) // fold tombstones into BOTH tables first
-    val base = spark.read.parquet(s"$dir/codes")
-    val extRows = readStreamExt(spark, extP.toString, base.schema)
-    if (extRows.isEmpty) { extFs.delete(extP, true); return false }
-    val maxBatch = extRows
-      .agg(max(col("batch_id").cast("long"))).head().getLong(0)
-    // completion boundary — see [[compactIvfPqStreamExtensionIn]]: only
-    // sentineled (job-committed) batches fold and raise the highwater;
-    // a mid-write kill's partial rows are carried for the replay to
-    // rewrite, and a pre-sentinel extension folds whole
-    val maxComplete =
-      sentineledBatches(spark, extP).fold(maxBatch)(_.foldLeft(-1L)(math.max))
-    val hw = math.max(streamHighwaterOf(spark, dir).getOrElse(-1L), maxComplete)
-    val foldable =
-      extRows.where(col("batch_id").cast("long") <= lit(maxComplete))
-    val carry =
-      extRows.where(col("batch_id").cast("long") > lit(maxComplete))
-    val merged = base.unionByName(
-      foldable.select(base.columns.toIndexedSeq.map(col): _*))
-    val (gen, gdir) = AtomicStore.begin(spark, path)
-    AtomicStore.failpoint("sqivf:meta")
-    Seq("meta", "centroids").foreach { t =>
-      spark.read.parquet(s"$dir/$t").write.mode("overwrite").parquet(s"$gdir/$t")
-    }
-    AtomicStore.failpoint("sqivf:codes")
-    merged.write.mode("overwrite").partitionBy("cell").parquet(s"$gdir/codes")
-    if (maxComplete < maxBatch) {
-      carry.write.mode("overwrite").partitionBy("batch_id", "cell")
-        .parquet(s"$gdir/codes_stream")
-      extFs.create(new org.apache.hadoop.fs.Path(
-        s"$gdir/codes_stream/_sentinels_enabled"), true).close()
-    }
-    writeStreamHighwater(spark, gdir, Some(hw))
-    AtomicStore.commit(spark, path, gen)
-    invalidateSqIvfModel(path)
-    true
-  }
+    sqIvfStore.fold(spark, path)
 
   /** Answer a query batch from a persisted SQ×IVF index — no coarse
     * fit, no corpus re-encode: probe-side kernel + cell equi-join

@@ -253,28 +253,17 @@ object Streams {
       Seq(spark.read.parquet(stateDir).drop("batch_id")), keys)
 
   /** Stream-maintained ANN index — the streaming face of the persisted
-    * IVF-PQ lifecycle: each arriving micro-batch of embeddings is encoded
-    * with the STORED model and appended to the index's stream extension
-    * ([[graft.sim.Similarity.appendStreamBatch]]), then the cell-drift
-    * signal is probed and, past `driftThreshold`, the index is REFIT from
-    * the source-of-truth corpus (`corpus` — the embedding table including
-    * everything streamed so far; the index is derived state, never
-    * reconstructed from its own codes).
-    *
-    * Exactly-once under at-least-once replay, by construction:
-    *  - the append writes `(batch_id, cell)`-partitioned rows with
-    *    dynamic partition overwrite, so a replayed batch rewrites its own
-    *    partitions (the [[incrementalStats]] idempotence pattern);
-    *  - a refit commits a fresh store generation carrying the folded
-    *    batch id as a stream highwater, ATOMICALLY with the fit
-    *    (`AtomicStore` single-marker commit) — a replay that lands after
-    *    the refit is skipped by the watermark instead of re-appending
-    *    vectors the new fit already holds;
-    *  - a crash DURING the refit leaves an uncommitted generation that
-    *    readers never see; the replay re-appends idempotently and
-    *    re-triggers the refit.
-    * Serving ([[graft.sim.Similarity.openIvfPqIndex]]) reads base codes ∪
-    * stream extension at any point — fresh sessions and restarts included.
+    * IVF-PQ store ([[graft.sim.CodesStore]]): each arriving micro-batch
+    * of embeddings is encoded with the STORED model and appended to the
+    * store's stream extension ([[graft.sim.Similarity.appendStreamBatch]]),
+    * then the cell-drift signal is probed and, past `driftThreshold`, the
+    * index is REFIT from the source-of-truth corpus (`corpus` — the
+    * embedding table including everything streamed so far; the index is
+    * derived state, never reconstructed from its own codes). Serving
+    * ([[graft.sim.Similarity.openIvfPqIndex]]) reads base codes ∪ stream
+    * extension at any point — fresh sessions and restarts included. See
+    * [[codesStream]] for the per-batch steps and why they are
+    * exactly-once under replay.
     */
   def annIndexStream(
       stream: DataFrame,
@@ -288,44 +277,92 @@ object Streams {
       foldMaxExtDirs: Int = DefaultFoldMaxExtDirs,
       failOnSkippedBatch: Boolean = false
   ): org.apache.spark.sql.streaming.StreamingQuery =
+    codesStream(graft.sim.Similarity.ivfPqStore, "annIndexStream", stream,
+      idCol, vecCol, indexPath, checkpointDir, corpus, driftThreshold,
+      foldEveryBatches, foldMaxExtDirs, failOnSkippedBatch)
+
+  /** Stream-maintained SQ×IVF index — [[annIndexStream]] on the int8
+    * store: the refit fires when the extension's share of the index
+    * reaches `growthThreshold` ([[graft.sim.Similarity.sqIvfStreamGrowth]]).
+    * Serving ([[graft.sim.Similarity.openSqIvfIndex]]) reads base ∪
+    * extension at any point.
+    */
+  def sqIvfIndexStream(
+      stream: DataFrame,
+      idCol: String,
+      vecCol: String,
+      indexPath: String,
+      checkpointDir: String,
+      corpus: SparkSession => DataFrame,
+      growthThreshold: Double = 0.5,
+      foldEveryBatches: Int = 0,
+      foldMaxExtDirs: Int = DefaultFoldMaxExtDirs,
+      failOnSkippedBatch: Boolean = false
+  ): org.apache.spark.sql.streaming.StreamingQuery =
+    codesStream(graft.sim.Similarity.sqIvfStore, "sqIvfIndexStream", stream,
+      idCol, vecCol, indexPath, checkpointDir, corpus, growthThreshold,
+      foldEveryBatches, foldMaxExtDirs, failOnSkippedBatch)
+
+  /** The one stream driver of a [[graft.sim.CodesStore]], either codec.
+    * Each micro-batch, holding the store's MUTATION LEASE end to end
+    * (owner `<driver>:b<N>`; re-entrant, so the store calls inside reuse
+    * the hold and a concurrent delete or compaction from another writer
+    * REJECTS instead of racing the write/checkpoint window):
+    *  1. appends the batch to the stream extension — `(batch_id, cell)`
+    *     partitions with dynamic overwrite, so a replayed batch rewrites
+    *     its own partitions (the [[incrementalStats]] idempotence
+    *     pattern);
+    *  2. refits from `corpus` once the codec's staleness signal reaches
+    *     `threshold` — a fresh generation carrying the batch id as its
+    *     stream highwater, ATOMICALLY with the fit, so a replay landing
+    *     after the refit is skipped instead of re-appending vectors the
+    *     new fit already holds; a crash DURING the refit leaves an
+    *     uncommitted generation that readers never see, and the replay
+    *     re-appends idempotently and re-triggers it;
+    *  3. otherwise folds the extension into base when the fold trigger
+    *     fires — ON BY DEFAULT and keyed to OBSERVED fragmentation (the
+    *     extension's partition-dir count, a metadata probe) rather than a
+    *     batch counter, which a refit would reset invisibly. Folding
+    *     collapses the per-batch fan-out (SCALE.md "ANN stream-extension
+    *     fold": 100 unfolded batches cost the serve 1.8×) and raises the
+    *     highwater atomically with its generation, so it is replay-safe
+    *     too. `foldEveryBatches` is an optional fixed-cadence override.
+    */
+  private def codesStream(
+      store: graft.sim.CodesStore[_],
+      driver: String,
+      stream: DataFrame,
+      idCol: String,
+      vecCol: String,
+      indexPath: String,
+      checkpointDir: String,
+      corpus: SparkSession => DataFrame,
+      threshold: Double,
+      foldEveryBatches: Int,
+      foldMaxExtDirs: Int,
+      failOnSkippedBatch: Boolean
+  ): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        // the batch holds the store's MUTATION LEASE end to end
-        // (append → drift probe/refit → fold): a concurrent delete or
-        // compaction from another writer REJECTS instead of racing the
-        // write/checkpoint window (re-entrant — the inner mutation
-        // calls re-use this hold)
         graft.util.AtomicStore.withMutationLease(s, indexPath,
-            owner = s"annIndexStream:b$batchId") {
-          val dropped = graft.sim.Similarity.appendStreamBatch(
+            owner = s"$driver:b$batchId") {
+          val dropped = store.appendStream(
             batch.toDF(), idCol, vecCol, indexPath, batchId)
           // opt-in fail-fast on the fresh-checkpoint highwater gap: the
           // drop is always recorded machine-readably (_skipped_batches);
           // with this flag the stream additionally TERMINATES instead of
-          // silently dropping every batch until ids catch up — for
-          // owners who prefer a dead stream to quiet data loss. Keyed to
+          // silently dropping every batch until ids catch up. Keyed to
           // THIS call's outcome, not the persistent ledger, so an old
           // incarnation's record can never kill a later healthy stream.
           failFastOnSkip(indexPath, batchId, dropped && failOnSkippedBatch)
-          val refitted = graft.sim.Similarity.refitIvfPqIndex(
-            corpus(s), idCol, vecCol, indexPath, driftThreshold,
-            streamHighwater = Some(batchId))
-          // self-maintaining layout, ON BY DEFAULT and keyed to OBSERVED
-          // fragmentation (the extension's partition-dir count — a
-          // metadata probe), not a blind batch counter: a drift refit
-          // resets the layout invisibly to a counter, while the probe
-          // self-corrects. Folding collapses the per-batch partition
-          // fan-out into base (SCALE.md "ANN stream-extension fold":
-          // 100 unfolded batches cost the serve 1.8×); idempotent under
-          // replay because the fold raises the highwater atomically
-          // with its generation. `foldEveryBatches` remains as an
-          // optional fixed-cadence override.
+          val refitted = store.refit(corpus(s), idCol, vecCol, indexPath,
+            threshold, streamHighwater = Some(batchId))
           if (!refitted && shouldFold(s, indexPath, batchId,
               foldEveryBatches, foldMaxExtDirs))
-            graft.sim.Similarity.compactIvfPqStreamExtension(s, indexPath)
+            store.fold(s, indexPath)
         }
         ()
       }
@@ -355,56 +392,6 @@ object Streams {
           "failOnSkippedBatch is set: terminating instead of silently " +
           "losing data. Keep the original checkpoint, point at a new " +
           "index, or refit.")
-
-  /** Stream-maintained SQ×IVF index — [[annIndexStream]]'s exact
-    * lifecycle on the int8 store: append each micro-batch to the
-    * `codes_stream` extension with the stored centroids
-    * ([[graft.sim.Similarity.appendSqIvfStreamBatch]] — batch-id
-    * partition overwrite, replay-idempotent), then refit from the
-    * source-of-truth corpus when the extension's share of the index
-    * passes `growthThreshold` ([[graft.sim.Similarity.refitSqIvfIndex]] —
-    * the refit generation carries the folded batch id as its stream
-    * highwater, atomically, so a post-refit replay is absorbed). Same
-    * exactly-once construction as [[annIndexStream]]; serving
-    * ([[graft.sim.Similarity.openSqIvfIndex]]) reads base ∪ extension at
-    * any point.
-    */
-  def sqIvfIndexStream(
-      stream: DataFrame,
-      idCol: String,
-      vecCol: String,
-      indexPath: String,
-      checkpointDir: String,
-      corpus: SparkSession => DataFrame,
-      growthThreshold: Double = 0.5,
-      foldEveryBatches: Int = 0,
-      foldMaxExtDirs: Int = DefaultFoldMaxExtDirs,
-      failOnSkippedBatch: Boolean = false
-  ): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        // lease held for the whole batch — see annIndexStream
-        graft.util.AtomicStore.withMutationLease(s, indexPath,
-            owner = s"sqIvfIndexStream:b$batchId") {
-          val dropped = graft.sim.Similarity.appendSqIvfStreamBatch(
-            batch.toDF(), idCol, vecCol, indexPath, batchId)
-          // see annIndexStream's failFastOnSkip note
-          failFastOnSkip(indexPath, batchId, dropped && failOnSkippedBatch)
-          val refitted = graft.sim.Similarity.refitSqIvfIndex(
-            corpus(s), idCol, vecCol, indexPath, growthThreshold,
-            streamHighwater = Some(batchId))
-          // see annIndexStream: default-on fragmentation-keyed fold when
-          // growth did not already refit this batch
-          if (!refitted && shouldFold(s, indexPath, batchId,
-              foldEveryBatches, foldMaxExtDirs))
-            graft.sim.Similarity.compactSqIvfStreamExtension(s, indexPath)
-        }
-        ()
-      }
-      .start()
 
   /** Open a parquet directory as a stream with an explicit schema — the
     * local test harness for the streaming paths.

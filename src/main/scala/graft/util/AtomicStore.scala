@@ -1,10 +1,10 @@
 package graft.util
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Crash-atomic publish protocol for the persisted index stores
-  * (`sim/Similarity` IVF-PQ + SQ×IVF, `dedup/DedupIndex`).
+  * (`sim/CodesStore` for IVF-PQ and SQ×IVF, `dedup/DedupIndex`).
   *
   * A (re)fit rewrites SEVERAL parquet tables (meta, centroids, codebooks,
   * codes, …). Writing them in place as sequential independent overwrites
@@ -162,6 +162,20 @@ object AtomicStore {
         val n = st.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
       })
+
+  /** The distinct ids in generation `dir`'s `tombstones` table, if any
+    * delete committed there — shared by the vector stores and the dedup
+    * index. Probed with [[hasDataFile]], not bare existence: a delete
+    * killed mid-write leaves a directory holding only `_temporary/`,
+    * which reads as "no tombstones".
+    */
+  private[graft] def tombstonesOpt(spark: SparkSession,
+                                   dir: String): Option[DataFrame] = {
+    val p = new Path(s"$dir/tombstones")
+    if (hasDataFile(fs(spark, dir), p))
+      Some(spark.read.parquet(p.toString).distinct())
+    else None
+  }
 
   /** The largest committed generation id, if any commit marker exists. */
   def currentGen(spark: SparkSession, path: String): Option[Long] =

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
-import graft.sim.Similarity
+import graft.sim.{CodesStore, Similarity}
 import graft.util.AtomicStore
 import org.apache.spark.sql.functions._
 
@@ -27,6 +27,49 @@ class AnnIndexStreamSpec extends SparkSpec {
       .filter(_.getName.endsWith(".parquet")).head.toPath
     java.nio.file.Files.createLink(src.resolve(s"f$i.parquet"), part)
   }
+
+  /** The store calls the codec-generic tests below make, per codec. The
+    * IVF-PQ entry keeps the tests' original names; the SQ×IVF entry runs
+    * the same steps and assertions on the int8 store (`id` tombstones).
+    */
+  private case class Store(
+      suffix: String,
+      streamDriver: String,
+      idCol: String,
+      write: (org.apache.spark.sql.DataFrame, String) => Unit,
+      appendStream: (org.apache.spark.sql.DataFrame, String, Long) => Boolean,
+      delete: (org.apache.spark.sql.DataFrame, String) => Unit,
+      compact: String => Unit,
+      fold: String => Boolean,
+      refit: (org.apache.spark.sql.DataFrame, String, Option[Long]) => Boolean,
+      codes: String => org.apache.spark.sql.DataFrame,
+      serve: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)
+
+  private val stores = Seq(
+    Store("", "annIndexStream", "cid",
+      (df, d) => Similarity.writeIvfPqIndex(df, "vec_id", "embedding", d,
+        dim = 64, nlist = 8, m = 8, codebookSize = 16),
+      (df, d, b) => Similarity.appendStreamBatch(df, "vec_id", "embedding", d, b),
+      (ids, d) => Similarity.deleteFromIvfPqIndex(ids, "vec_id", d),
+      d => Similarity.compactIvfPqIndex(spark, d),
+      d => Similarity.compactIvfPqStreamExtension(spark, d),
+      (df, d, hw) => Similarity.refitIvfPqIndex(df, "vec_id", "embedding", d,
+        threshold = 0.0, streamHighwater = hw),
+      d => Similarity.openIvfPqIndex(spark.newSession(), d).codes,
+      (d, q) => Similarity.ivfPqServe(Similarity.openIvfPqIndex(
+        spark.newSession(), d), q, "vec_id", "embedding", k = 3, nprobe = 4)),
+    Store(" (SQ×IVF)", "sqIvfIndexStream", "id",
+      (df, d) => Similarity.writeSqIvfIndex(df, "vec_id", "embedding", d,
+        dim = 64, nlist = 8),
+      (df, d, b) => Similarity.appendSqIvfStreamBatch(df, "vec_id", "embedding", d, b),
+      (ids, d) => Similarity.deleteFromSqIvfIndex(ids, "vec_id", d),
+      d => Similarity.compactSqIvfIndex(spark, d),
+      d => Similarity.compactSqIvfStreamExtension(spark, d),
+      (df, d, hw) => Similarity.refitSqIvfIndex(df, "vec_id", "embedding", d,
+        threshold = 0.0, streamHighwater = hw),
+      d => Similarity.openSqIvfIndex(spark.newSession(), d).codes,
+      (d, q) => Similarity.sqIvfServeIndex(Similarity.openSqIvfIndex(
+        spark.newSession(), d), q, "vec_id", "embedding", k = 3, nprobe = 4)))
 
   test("extension growth: streamed batches serve identically to a stored-model re-encode") {
     val d = tmpDir() + "/annstream"
@@ -132,37 +175,33 @@ class AnnIndexStreamSpec extends SparkSpec {
     assert(readded == 1L, s"delete→re-add must serve exactly one row, got $readded")
   }
 
-  test("compacting away an ENTIRE stream batch leaves a readable store (no schema-inference brick)") {
-    val d = tmpDir() + "/alldead"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50),
-      "vec_id", "embedding", d, batchId = 0L)
-    // tombstone EVERY streamed id, compact via the semi-join fallback leg
-    // (threshold forced to 1 so the bounded-predicate path is exercised)
-    Similarity.deleteFromIvfPqIndex(
-      emb.where(col("vec_id") >= 40 && col("vec_id") < 50)
-        .select(col("vec_id")), "vec_id", d)
-    val saved = Similarity.CompactPredicateMaxTerms
-    Similarity.CompactPredicateMaxTerms = 1
-    try Similarity.compactIvfPqIndex(spark, d)
-    finally Similarity.CompactPredicateMaxTerms = saved
-    // every codes_stream partition died: the store must still OPEN and
-    // serve (explicit-schema extension read — a data-free directory is
-    // an empty frame, not an AnalysisException)
-    val idx = Similarity.openIvfPqIndex(spark.newSession(), d)
-    assert(idx.codes.count() == 40)
-    assert(Similarity.ivfPqServe(idx, emb.where(col("vec_id") < 5),
-      "vec_id", "embedding", k = 3, nprobe = 4).count() > 0)
-    // the growth/fold paths are equally unbricked: folding a data-free
-    // extension is a no-op that removes the empty directory
-    assert(!Similarity.compactIvfPqStreamExtension(spark, d))
-    val gdir = AtomicStore.resolve(spark, d)
-    assert(!new java.io.File(s"$gdir/codes_stream").exists(),
-      "the fold removes a data-free extension directory")
-    assert(Similarity.openIvfPqIndex(spark.newSession(), d).codes.count() == 40)
-  }
+  for (st <- stores)
+    test("compacting away an ENTIRE stream batch leaves a readable store " +
+      "(no schema-inference brick)" + st.suffix) {
+      val d = tmpDir() + "/alldead"
+      st.write(emb.where(col("vec_id") < 40), d)
+      st.appendStream(emb.where(col("vec_id") >= 40 && col("vec_id") < 50), d, 0L)
+      // tombstone EVERY streamed id, compact via the semi-join fallback leg
+      // (threshold forced to 1 so the bounded-predicate path is exercised)
+      st.delete(emb.where(col("vec_id") >= 40 && col("vec_id") < 50)
+        .select(col("vec_id")), d)
+      val saved = CodesStore.CompactPredicateMaxTerms
+      CodesStore.CompactPredicateMaxTerms = 1
+      try st.compact(d)
+      finally CodesStore.CompactPredicateMaxTerms = saved
+      // every codes_stream partition died: the store must still OPEN and
+      // serve (explicit-schema extension read — a data-free directory is
+      // an empty frame, not an AnalysisException)
+      assert(st.codes(d).count() == 40)
+      assert(st.serve(d, emb.where(col("vec_id") < 5)).count() > 0)
+      // the growth/fold paths are equally unbricked: folding a data-free
+      // extension is a no-op that removes the empty directory
+      assert(!st.fold(d))
+      val gdir = AtomicStore.resolve(spark, d)
+      assert(!new java.io.File(s"$gdir/codes_stream").exists(),
+        "the fold removes a data-free extension directory")
+      assert(st.codes(d).count() == 40)
+    }
 
   test("stream-extension compaction: folded layout serves identically, raises the highwater, survives a kill") {
     val d = tmpDir() + "/streamfold"
@@ -475,74 +514,79 @@ class AnnIndexStreamSpec extends SparkSpec {
     assert(!new java.io.File(s"$d/_mutation_lease").exists())
   }
 
-  test("a delete racing a live stream batch REJECTS on the mutation lease; " +
-    "between batches it succeeds (single-writer contract, enforced)") {
-    val d = tmpDir() + "/annlease"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    // simulate the stream batch's hold: the drivers wrap each batch in
-    // withMutationLease (same code path), paused mid-batch here
-    val inBatch = new java.util.concurrent.CountDownLatch(1)
-    val finishBatch = new java.util.concurrent.CountDownLatch(1)
-    val holder = new Thread(() =>
-      graft.util.AtomicStore.withMutationLease(spark, d,
-          owner = "annIndexStream:b7") {
-        inBatch.countDown()
-        finishBatch.await()
-      })
-    holder.start()
-    inBatch.await()
-    try {
-      val e = intercept[IllegalStateException] {
-        Similarity.deleteFromIvfPqIndex(
-          emb.where(col("vec_id") === 3).select(col("vec_id")), "vec_id", d)
-      }
-      assert(e.getMessage.contains("annIndexStream:b7"),
-        s"rejection must name the holder, got: ${e.getMessage}")
-      // compactions and folds reject the same way
-      intercept[IllegalStateException] { Similarity.compactIvfPqIndex(spark, d) }
-      intercept[IllegalStateException] {
-        Similarity.compactIvfPqStreamExtension(spark, d)
-      }
-    } finally { finishBatch.countDown(); holder.join() }
-    // the batch released the lease: the takedown proceeds normally
-    Similarity.deleteFromIvfPqIndex(
-      emb.where(col("vec_id") === 3).select(col("vec_id")), "vec_id", d)
-    assert(Similarity.openIvfPqIndex(spark.newSession(), d)
-      .codes.where(col("cid") === 3L).count() == 0)
-    assert(!new java.io.File(s"$d/_mutation_lease").exists(),
-      "mutations release the lease on completion")
-    // a crashed holder's stale lease is broken after the grace
-    val leaseFile = new java.io.File(s"$d/_mutation_lease")
-    java.nio.file.Files.writeString(leaseFile.toPath, "crashed:deadbeef")
-    assert(leaseFile.setLastModified(
-      System.currentTimeMillis() - 2 * graft.util.AtomicStore.DefaultLeaseGraceMs))
-    Similarity.deleteFromIvfPqIndex(
-      emb.where(col("vec_id") === 4).select(col("vec_id")), "vec_id", d)
-    assert(!leaseFile.exists(), "stale lease broken and released")
-  }
+  for (st <- stores)
+    test("a delete racing a live stream batch REJECTS on the mutation lease; " +
+      "between batches it succeeds (single-writer contract, enforced)" +
+      st.suffix) {
+      val d = tmpDir() + "/annlease"
+      st.write(emb.where(col("vec_id") < 40), d)
+      // simulate the stream batch's hold: the drivers wrap each batch in
+      // withMutationLease (same code path), paused mid-batch here
+      val holderName = s"${st.streamDriver}:b7"
+      val inBatch = new java.util.concurrent.CountDownLatch(1)
+      val finishBatch = new java.util.concurrent.CountDownLatch(1)
+      val holder = new Thread(() =>
+        graft.util.AtomicStore.withMutationLease(spark, d, owner = holderName) {
+          inBatch.countDown()
+          finishBatch.await()
+        })
+      holder.start()
+      inBatch.await()
+      try {
+        val e = intercept[IllegalStateException] {
+          st.delete(emb.where(col("vec_id") === 3).select(col("vec_id")), d)
+        }
+        assert(e.getMessage.contains(holderName),
+          s"rejection must name the holder, got: ${e.getMessage}")
+        // compactions and folds reject the same way
+        intercept[IllegalStateException] { st.compact(d) }
+        intercept[IllegalStateException] { st.fold(d) }
+      } finally { finishBatch.countDown(); holder.join() }
+      // the batch released the lease: the takedown proceeds normally
+      st.delete(emb.where(col("vec_id") === 3).select(col("vec_id")), d)
+      assert(st.codes(d).where(col(st.idCol) === 3L).count() == 0)
+      assert(!new java.io.File(s"$d/_mutation_lease").exists(),
+        "mutations release the lease on completion")
+      // a crashed holder's stale lease is broken after the grace
+      val leaseFile = new java.io.File(s"$d/_mutation_lease")
+      java.nio.file.Files.writeString(leaseFile.toPath, "crashed:deadbeef")
+      assert(leaseFile.setLastModified(
+        System.currentTimeMillis() - 2 * graft.util.AtomicStore.DefaultLeaseGraceMs))
+      st.delete(emb.where(col("vec_id") === 4).select(col("vec_id")), d)
+      assert(!leaseFile.exists(), "stale lease broken and released")
+    }
 
-  test("a crashed stream refit's highwater is not inherited by a later non-stream fit") {
-    val d = tmpDir() + "/hwinherit"
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 40),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    // stream refit that crashes at the commit point, AFTER its highwater
-    // file landed in the (now abandoned) generation directory
-    AtomicStore.failpoint =
-      l => if (l == "commit") throw new RuntimeException("killed at commit")
-    try intercept[RuntimeException] {
-      Similarity.refitIvfPqIndex(emb.where(col("vec_id") < 50),
-        "vec_id", "embedding", d, threshold = 0.0, streamHighwater = Some(9L))
-    } finally AtomicStore.failpoint = _ => ()
-    // a plain (non-stream) refit reuses the abandoned generation id — it
-    // must scrub the stale watermark, or every future stream append with
-    // batchId <= 9 would be silently skipped
-    Similarity.writeIvfPqIndex(emb.where(col("vec_id") < 50),
-      "vec_id", "embedding", d, dim = 64, nlist = 8, m = 8, codebookSize = 16)
-    Similarity.appendStreamBatch(
-      emb.where(col("vec_id") >= 50 && col("vec_id") < 60),
-      "vec_id", "embedding", d, batchId = 0L)
-    assert(Similarity.openIvfPqIndex(spark.newSession(), d).codes.count() == 60,
-      "append after the clean fit must not be skipped by a stale highwater")
-  }
+  for (st <- stores)
+    test("a second open of a generation reads no model table (the model " +
+      "is cached per generation directory)" + st.suffix) {
+      val d = tmpDir() + "/opencache"
+      st.write(emb.where(col("vec_id") < 40), d)
+      assert(st.codes(d).count() == 40)
+      // a reopen that reloaded the model would fail on the removed tables
+      val gdir = AtomicStore.resolve(spark, d)
+      Seq("meta", "centroids", "codebooks").foreach(t =>
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$gdir/$t")))
+      assert(st.codes(d).count() == 40)
+    }
+
+  for (st <- stores)
+    test("a crashed stream refit's highwater is not inherited by a later " +
+      "non-stream fit" + st.suffix) {
+      val d = tmpDir() + "/hwinherit"
+      st.write(emb.where(col("vec_id") < 40), d)
+      // stream refit that crashes at the commit point, AFTER its highwater
+      // file landed in the (now abandoned) generation directory
+      AtomicStore.failpoint =
+        l => if (l == "commit") throw new RuntimeException("killed at commit")
+      try intercept[RuntimeException] {
+        st.refit(emb.where(col("vec_id") < 50), d, Some(9L))
+      } finally AtomicStore.failpoint = _ => ()
+      // a plain (non-stream) refit reuses the abandoned generation id — it
+      // must scrub the stale watermark, or every future stream append with
+      // batchId <= 9 would be silently skipped
+      st.write(emb.where(col("vec_id") < 50), d)
+      st.appendStream(emb.where(col("vec_id") >= 50 && col("vec_id") < 60), d, 0L)
+      assert(st.codes(d).count() == 60,
+        "append after the clean fit must not be skipped by a stale highwater")
+    }
 }

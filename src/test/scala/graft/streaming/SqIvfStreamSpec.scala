@@ -194,7 +194,7 @@ class SqIvfStreamSpec extends SparkSpec {
     assert(spark.read.parquet(s"$g/codes").count() == 55)
     // now delete an ENTIRE streamed batch and compact twice: the second
     // pass must read the data-free extension without schema inference
-    // (the readStreamExt hazard, pinned on the SQ store too)
+    // (the explicit-schema extension read, pinned on the SQ store too)
     Similarity.appendSqIvfStreamBatch(
       emb.where(col("vec_id") >= 60 && col("vec_id") < 70),
       "vec_id", "embedding", d, batchId = 2L)
