@@ -1,5 +1,7 @@
 package graft
 
+import graft.bench.Meter
+import graft.bench.Meter.f3
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness on the BASELINE.md protocol (reference
@@ -14,7 +16,9 @@ import org.apache.spark.sql.SparkSession
   *
   * Prints ONE JSON line: {"metric","value","unit","queries","sf",...} —
   * "queries" carries the per-query median (the driver's compare key),
-  * "stats" the full distribution.
+  * "stats" the full distribution, "layers" each query's Spark work per
+  * timed run ([[graft.bench.Meter.SparkCounter]]): plan/exec split, jobs,
+  * stages, tasks, task CPU, input, shuffle and spill.
   *
   * Exit code contract (r17): 0 = gate pass; 1 = gate fail attributable
   * to the PLAN (some gate-breaching iteration ran steal-clean); 3 = gate
@@ -90,16 +94,6 @@ object Bench {
                             maxCleanIter: Double, dirtyBreachIters: Int,
                             cleanBreachIters: Int)
 
-  /** Format a seconds value for the JSON line. Non-finite values (which
-    * valid JSON cannot carry and which would silently kill the driver's
-    * parse of the WHOLE artifact) degrade to the same -1.0 sentinel a
-    * failed query reports — a measurement can never be NaN/Inf unless
-    * the clock or stats code is broken, and one poisoned number must not
-    * cost the round its comparison baseline.
-    */
-  private def f3(v: Double): String =
-    if (java.lang.Double.isFinite(v)) f"$v%.3f" else "-1.000"
-
   /** Build the ONE JSON line the driver parses — pure function of the
     * measurements so its contract is testable without running Spark:
     * exactly one line (no embedded newlines), ASCII-only (the driver's
@@ -107,6 +101,9 @@ object Bench {
     * BENCH_r18's artifact shows em-dashes as '?'; a multibyte sequence
     * split across a read boundary is a parse risk the policy prose is
     * not worth), every value a finite JSON number or bool.
+    * `layers` holds each query's Spark work summed over its timed runs
+    * (`iters` plus its retries); a measured query with an entry reports
+    * the per-run mean.
     * Returns (line, gatePassed, contaminated).
     */
   def gateJson(
@@ -115,7 +112,8 @@ object Bench {
       stealThresh: Double, cleanThresh: Double,
       maxRetries: Int, maxRetriesStorm: Int, stormStealSec: Double,
       gateChecks: Int, gateDeferredSteps: Int,
-      only: Set[String], upJson: String, sfDir: String)
+      only: Set[String], upJson: String, sfDir: String,
+      layers: Map[String, Meter.Work])
       : (String, Boolean, Boolean) = {
     // published per-query value = the steal-clean median (falls back to
     // the plain median when too few clean iterations exist — clean_iters
@@ -133,6 +131,9 @@ object Bench {
         s""""budget_raised":${m.budgetRaised},""" +
         s""""steal_sec":${f3(m.stealSec)},"gc_sec":${f3(m.gcSec)}}"""
     }.mkString("{", ",", "}")
+    val layersJson = results.collect { case (k, Some(m)) =>
+      layers.get(k).map(w => s""""$k":${w.per(iters + m.retried).json}""")
+    }.flatten.mkString("{", ",", "}")
     val total = results.flatMap(_._2).map(_.medianClean).sum
     val worstMax = results.flatMap(_._2).map(_.steady.max).maxOption.getOrElse(-1.0)
     val rawWorstMax = results.flatMap(_._2).map(_.rawMax).maxOption.getOrElse(-1.0)
@@ -155,7 +156,7 @@ object Bench {
       if (gate) "pass" else if (contaminated) "contaminated" else "slow"
     val subset = if (only.isEmpty) "" else
       s""","subset":[${only.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]"""
-    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"stats":$statsJson,"iters":$iters,"warmup":$warmup,"worst_max":${f3(worstMax)},"raw_worst_max":${f3(rawWorstMax)},"outliers_retried":$totalRetried,"gate_class":"$gateClass","gate_preflight":{"checks":$gateChecks,"deferred_30s_steps":$gateDeferredSteps},"outlier_policy":"re-measure when own steal+iowait delta > ${stealThresh} cpu-s (any duration; waits out the storm first, bounded) OR >=2s AND >2x running median OR >=1.2s AND >3x running median WITH corroborating evidence (iteration steal > ${cleanThresh} cpu-s or gc > half the excess over baseline); budget $maxRetries/query, raised to $maxRetriesStorm once >$stormStealSec cpu-s of steal is OBSERVED in the query's own iterations (r17); between queries the suite defers (bounded 30s steps) while the box is loaded after a steal-y query; published median = steal-clean median (iteration delta <= ${cleanThresh} cpu-s) when >= max(3, iters/4) clean iterations exist, else plain median (see clean_iters); gate max always over all accepted iterations; rc: 0 pass, 1 plan-slow (a gate breach ran steal-clean), 3 contaminated (every breach carried steal -- box storm, not plan)","pass_max_lt_2s":$gate$subset$upJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"stats":$statsJson,"layers":$layersJson,"iters":$iters,"warmup":$warmup,"worst_max":${f3(worstMax)},"raw_worst_max":${f3(rawWorstMax)},"outliers_retried":$totalRetried,"gate_class":"$gateClass","gate_preflight":{"checks":$gateChecks,"deferred_30s_steps":$gateDeferredSteps},"outlier_policy":"re-measure when own steal+iowait delta > ${stealThresh} cpu-s (any duration; waits out the storm first, bounded) OR >=2s AND >2x running median OR >=1.2s AND >3x running median WITH corroborating evidence (iteration steal > ${cleanThresh} cpu-s or gc > half the excess over baseline); budget $maxRetries/query, raised to $maxRetriesStorm once >$stormStealSec cpu-s of steal is OBSERVED in the query's own iterations (r17); between queries the suite defers (bounded 30s steps) while the box is loaded after a steal-y query; published median = steal-clean median (iteration delta <= ${cleanThresh} cpu-s) when >= max(3, iters/4) clean iterations exist, else plain median (see clean_iters); gate max always over all accepted iterations; rc: 0 pass, 1 plan-slow (a gate breach ran steal-clean), 3 contaminated (every breach carried steal -- box storm, not plan)","pass_max_lt_2s":$gate$subset$upJson,"sf":"$sfDir"}"""
     (line, gate, contaminated)
   }
 
@@ -197,8 +198,7 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    import graft.bench.Meter
+    val counter = new Meter.SparkCounter(spark.sparkContext)
 
     def runOnce(name: String): Double = {
       val t0 = System.nanoTime()
@@ -282,7 +282,10 @@ object Bench {
       var budgetRaised = false
       val steal0 = Meter.stealIoSeconds()
       val gc0 = Meter.gcSeconds()
-      (1 to iters).foreach { _ =>
+      // the counter's key: every timed run, retries included, and nothing
+      // else runs Spark work under this group
+      spark.sparkContext.setJobGroup(name, s"graft.Bench $name")
+      try (1 to iters).foreach { _ =>
         var s0 = Meter.stealIoSeconds()
         var g0 = Meter.gcSeconds()
         var t = runOnce(name)
@@ -349,7 +352,7 @@ object Bench {
           }
         }
         steady += ((t, stealD))
-      }
+      } finally spark.sparkContext.clearJobGroup()
       val all = steady.map(_._1).toSeq
       val clean = steady.filter(_._2 <= cleanThresh).map(_._1).toSeq
       val medianClean =
@@ -473,10 +476,15 @@ object Bench {
           s""","upscale":{"error":"$msg"}"""
       }
 
+    val layers = try counter.read() catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] no layers: ${e.getMessage}")
+        Map.empty[String, Meter.Work]
+    }
     val (line, gate, contaminated) = gateJson(
       results, iters, warmup, gateSec,
       stealThresh, cleanThresh, maxRetries, maxRetriesStorm, stormStealSec,
-      gateChecks, gateDeferredSteps, only, upJson, sfDir)
+      gateChecks, gateDeferredSteps, only, upJson, sfDir, layers)
     println(line)
     // the full distribution also lands in the repo so the round artifact
     // can't lose it to output truncation; a SPARK_GRAFT_ONLY dev-subset run

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * in SCALE.md. Run manually, not part of the driver contract.
   *
   * Usage: runMain graft.bench.ScaleProbe [small|medium|large]
-  *          [grid|corpus|text|asof|ann|web|stream|fold|serve|all]
+  *          [grid|corpus|text|nc|web|media|cc|asof|ann|stream|all]
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -806,149 +806,6 @@ object ScaleProbe {
           .option("checkpointLocation", ckpt)
           .format("noop").start()
       }
-    }
-    if (what == "fold" || what == "all") {
-      // steady-state serve latency over a LONG-running stream (r18): the
-      // r17 fold was measured at one point (100 batches, 1.8× serve
-      // cost); this probe drives 200+ micro-batches through the
-      // fragmentation-keyed default policy (the stream drivers' trigger:
-      // fold when the extension holds >= 64 batch dirs) and samples the
-      // serve latency along the way — the SCALE.md evidence that the
-      // default keeps a months-long stream from going metadata-bound.
-      val batches = size match {
-        case "small" => 80
-        case "medium" => 220
-        case "large" => 500
-        case other => throw new IllegalArgumentException(s"Unknown size: $other")
-      }
-      val perBatch = 500L
-      val d = java.nio.file.Files
-        .createTempDirectory("graft_fold_probe").toString + "/sqivf"
-      val base = DataGen.vectors(spark, 20000L, 64)
-      graft.sim.Similarity.writeSqIvfIndex(base, "vec_id", "embedding", d,
-        dim = 64, nlist = 16)
-      val queries = base.where(col("vec_id") < 32)
-      def serveOnce(): Double = {
-        val t0 = System.nanoTime()
-        val idx = graft.sim.Similarity.openSqIvfIndex(spark.newSession(), d)
-        graft.sim.Similarity.sqIvfServeIndex(idx, queries,
-            "vec_id", "embedding", k = 10, nprobe = 4)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      if (wanted("fold_steady_state")) {
-        serveOnce() // warm
-        var folds = 0
-        var foldSecs = 0.0
-        val samples = scala.collection.mutable.ArrayBuffer[(Int, Double, Int)]()
-        val t0 = System.nanoTime()
-        (0 until batches).foreach { b =>
-          val lo = 100000L + b * perBatch
-          graft.sim.Similarity.appendSqIvfStreamBatch(
-            DataGen.vectors(spark, perBatch, 64, seed = 42L + b)
-              .withColumn("vec_id", col("vec_id") + lo),
-            "vec_id", "embedding", d, batchId = b.toLong)
-          // the stream drivers' default trigger, replicated verbatim
-          // (Streams.shouldFold with foldMaxExtDirs = 64)
-          if (graft.sim.Similarity.streamExtensionDirCount(spark, d) >= 64) {
-            val f0 = System.nanoTime()
-            graft.sim.Similarity.compactSqIvfStreamExtension(spark, d)
-            foldSecs += (System.nanoTime() - f0) / 1e9
-            folds += 1
-          }
-          if (b % 20 == 19)
-            samples += ((b + 1, serveOnce(),
-              graft.sim.Similarity.streamExtensionDirCount(spark, d)))
-        }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val line = samples.map { case (b, s, dirs) =>
-          f"b$b=$s%.2fs/$dirs" }.mkString(" ")
-        println(f"$size fold_steady_state: batches=$batches " +
-          f"folds=$folds fold_total=$foldSecs%.1f s wall=$wall%.1f s " +
-          s"serve_samples(batch=serve_s/ext_dirs): $line")
-      }
-    }
-
-    if (what == "serve" || what == "all") {
-      // concurrent-load SERVE benchmark (r18): the HTTP layer had
-      // correctness/chaos specs but no measured p99 under parallel
-      // clients. Serve the size-keyed bench grid FROM PARQUET (the
-      // deployment shape — a store read per cache miss, not an in-flight
-      // generator), drive N concurrent clients over a mixed
-      // point/stats/region workload with repeats (the cache-hit-heavy
-      // production mix) and report qps + latency percentiles.
-      val grid = DataGen.benchGrid(spark, size)
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_serve_store").toString + "/grid"
-      grid.write.mode("overwrite").parquet(store)
-      val served = spark.read.parquet(store)
-      val spec = SeriesSpec("ts", Seq("lat", "lon"), "temperature")
-      val running = graft.serve.Server.start(spark,
-        Map("bench" -> ((served, spec))))
-      try {
-        val port = running.port
-        // never throws: a connection error or a body-less error response
-        // returns code -1/599 — a dead client thread would silently
-        // truncate the sample set and publish qps/p99 over a clean-looking
-        // subset (the "no silent caps" trap)
-        def get(path: String): (Int, Long) = {
-          val t0 = System.nanoTime()
-          try {
-            val c = java.net.URI.create(s"http://127.0.0.1:$port$path")
-              .toURL.openConnection()
-              .asInstanceOf[java.net.HttpURLConnection]
-            c.setRequestMethod("GET")
-            val code = c.getResponseCode
-            val in = if (code >= 400) c.getErrorStream else c.getInputStream
-            if (in != null) {
-              val buf = new Array[Byte](1 << 16)
-              try { while (in.read(buf) != -1) () } finally in.close()
-            }
-            (code, System.nanoTime() - t0)
-          } catch {
-            case _: java.io.IOException => (599, System.nanoTime() - t0)
-          }
-        }
-        // the workload: 24 distinct point keys + 4 stats/region shapes,
-        // cycled — repeats hit the response cache, fresh keys miss and
-        // pay a pruned store scan (the production mix). Warm one of each
-        // shape first (plan compilation off the clock, like the bench).
-        val paths: IndexedSeq[String] =
-          (for (la <- -60 to 60 by 30; lo <- 0 to 120 by 40) yield
-            s"/api/v1/data/datasets/bench/point?lat=$la.0&lon=$lo.0") ++
-          Seq(
-            "/api/v1/data/datasets/bench/stats",
-            "/api/v1/data/datasets/bench/stats?min_lon=0&min_lat=0&max_lon=60&max_lat=60",
-            "/api/v1/metrics/temporal/bench?metric=monthly",
-            "/api/v1/data/datasets/bench")
-        if (wanted("serve_concurrent")) {
-          get(paths.head); get(paths(paths.size - 4)); get(paths.last)
-          val clients = 16
-          val perClient = 48
-          val lat = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-          val errors = new java.util.concurrent.atomic.AtomicInteger(0)
-          val t0 = System.nanoTime()
-          val ts = (0 until clients).map { c =>
-            new Thread(() => (0 until perClient).foreach { i =>
-              val (code, nanos) = get(paths((c * perClient + i) % paths.size))
-              if (code != 200) { errors.incrementAndGet(); () }
-              lat.add(nanos); ()
-            })
-          }
-          ts.foreach(_.start()); ts.foreach(_.join())
-          val wall = (System.nanoTime() - t0) / 1e9
-          import scala.jdk.CollectionConverters._
-          val sorted = lat.asScala.toIndexedSeq.map(_ / 1e9).sorted
-          def p(q: Double) = sorted((q * (sorted.size - 1)).toInt)
-          val hits = running.cacheStats()
-          println(f"$size serve_concurrent: clients=$clients " +
-            f"reqs=${sorted.size} errors=${errors.get()} wall=$wall%.2f s " +
-            f"qps=${sorted.size / wall}%.1f p50=${p(0.5)}%.3f s " +
-            f"p95=${p(0.95)}%.3f s p99=${p(0.99)}%.3f s " +
-            f"max=${sorted.last}%.3f s cache_hits=${hits.hits} " +
-            f"misses=${hits.misses}")
-        }
-      } finally running.stop()
     }
     spark.stop()
   }

@@ -1,6 +1,8 @@
 package graft.bench
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import Meter.f3
 
 /** UPSCALE DRIFT PROBE, as its own main — run by [[graft.Bench]] in a
   * FRESH CHILD JVM (r17): the r13 and r16 rounds both recorded in-suite
@@ -8,16 +10,18 @@ import org.apache.spark.sql.SparkSession
   * JVM could not reproduce (~1× wall) — same-JVM end-of-suite state
   * (code-cache pressure, accumulated session state) distorts the probe
   * even with an isolated newSession. A child JVM inherits nothing, so
-  * its numbers reproduce standalone by construction and match what
-  * [[UpscaleAdjudicate]] measures.
+  * its numbers reproduce standalone by construction.
   *
   * Probe protocol (unchanged from the in-suite r16 version): the same
-  * plans at FACTOR× the gate rows ([[UpscaleTables]] — key-shifted fact
+  * plans at FACTOR× the gate rows ([[buildTables]] — key-shifted fact
   * copies, letter-substituted documents so dedup stays a bigger workload
   * rather than a quadratic-clique one), 1 warmup + 2 timed iterations,
   * steal-aware bounded retries, per-iteration steal/code-cache/JIT
-  * attribution in the JSON, and a contention preflight with bounded
-  * deferral.
+  * attribution in the JSON, per-query Spark work per timed run in
+  * `layers` ([[Meter.SparkCounter]]: plan/exec split, jobs, stages,
+  * tasks, task CPU, input, shuffle, spill — the stage attribution that
+  * pins a breach on partition collapse, kernel cost or spill), and a
+  * contention preflight with bounded deferral.
   *
   * Usage: UpscaleProbe <baseMediansFile>
   *   baseMediansFile: lines of `<query>=<gate-scale clean median sec>`
@@ -39,7 +43,46 @@ object UpscaleProbe {
     "q_dedup_index", "q_html_extract", "q_sq_ann", "q_chunk_docs",
     "q_web_pipeline")
 
-  private def f3(v: Double) = f"$v%.3f"
+  /** The upscaled tables: `factor`× fact tables built by unioning
+    * key-shifted copies (matched l_orderkey/o_orderkey shifts keep the
+    * join graph), dimension tables copied as-is (broadcast/SMJ shapes
+    * preserved). Documents get a per-copy letter substitution so dedup
+    * measures a BIGGER corpus — copy 26 would rotate by 26 % 26 = 0, an
+    * exact duplicate of copy 0, quadratically inflating the dedup
+    * candidate set and silently measuring a different workload; hence
+    * the hard cap.
+    */
+  private def buildTables(spark: SparkSession, sfDir: String, upDir: String,
+                          factor: Int): Unit = {
+    require(factor >= 1 && factor <= 26,
+      s"upscale factor $factor out of [1, 26]: copy 26 would repeat copy 0's " +
+        "text verbatim and quadratically inflate the dedup candidate set")
+    def copyDim(t: String): Unit =
+      spark.read.parquet(s"$sfDir/$t.parquet")
+        .write.mode("overwrite").parquet(s"$upDir/$t.parquet")
+    Seq("region", "nation", "customer", "supplier", "part").foreach(copyDim)
+    def shifted(t: String)(f: (DataFrame, Int) => DataFrame): Unit = {
+      val base = spark.read.parquet(s"$sfDir/$t.parquet")
+      (0 until factor).map(k => f(base, k)).reduce(_.unionByName(_))
+        .write.mode("overwrite").parquet(s"$upDir/$t.parquet")
+    }
+    shifted("lineitem")((d, k) =>
+      d.withColumn("l_orderkey", col("l_orderkey") + lit(k.toLong * 10000000L)))
+    shifted("orders")((d, k) =>
+      d.withColumn("o_orderkey", col("o_orderkey") + lit(k.toLong * 10000000L)))
+    shifted("events")((d, k) => d
+      .withColumn("event_id", col("event_id") + lit(k.toLong * 100000000L))
+      .withColumn("user_id", col("user_id") + lit(k.toLong * 10000000L)))
+    val alpha = "abcdefghijklmnopqrstuvwxyz"
+    shifted("documents")((d, k) => d
+      .withColumn("doc_id", col("doc_id") + lit(k.toLong * 100000000L))
+      .withColumn("text", translate(col("text"),
+        alpha + alpha.toUpperCase,
+        alpha.drop(k % 26) + alpha.take(k % 26) +
+          (alpha.drop(k % 26) + alpha.take(k % 26)).toUpperCase)))
+    shifted("embeddings")((d, k) =>
+      d.withColumn("vec_id", col("vec_id") + lit(k.toLong * 1000000L)))
+  }
 
   def main(args: Array[String]): Unit = {
     val baseMedians: Map[String, Double] = args.headOption.map { p =>
@@ -73,10 +116,8 @@ object UpscaleProbe {
     val upDirPath = java.nio.file.Files.createTempDirectory("graft-upscale")
     val upDir = upDirPath.toString
     try {
-      // single-source recipe, shared with the standalone adjudicator
-      // (UpscaleAdjudicate) so a re-measurement is evidence about the
-      // SAME workload
-      UpscaleTables.build(spark, sfDir, upDir, upscaleFactor)
+      buildTables(spark, sfDir, upDir, upscaleFactor)
+      val counter = new Meter.SparkCounter(spark.sparkContext)
 
       def upOnce(name: String): (Double, Double) = {
         val s0 = Meter.stealIoSeconds()
@@ -119,7 +160,8 @@ object UpscaleProbe {
           var retried = 0
           def budget: Int =
             if (steals.sum > stormStealSec) stormRetries else baseRetries
-          (1 to 2).foreach { _ =>
+          spark.sparkContext.setJobGroup(q, s"upscale $q")
+          try (1 to 2).foreach { _ =>
             val j0 = Meter.jitMs
             var (t, sd) = upOnce(q)
             raw += t; steals += sd; codeMbs += Meter.codeCacheMb
@@ -142,7 +184,7 @@ object UpscaleProbe {
               raw += t; steals += sd; codeMbs += Meter.codeCacheMb
               jits += (Meter.jitMs - j1)
             }
-          }
+          } finally spark.sparkContext.clearJobGroup()
           lastSteal = steals.sum
           // reported statistic: the MIN of the timed iterations (2
           // samples have no median — the field names say so); raw +
@@ -155,6 +197,7 @@ object UpscaleProbe {
             None
         }
       }
+      val work = counter.read()
       val upQs = measured.map { case (k, m) => "\"" + k + "\":" + f3(m.min) }
         .mkString("{", ",", "}")
       val ratios = measured.flatMap { case (k, m) =>
@@ -168,13 +211,16 @@ object UpscaleProbe {
         s""""$k":{"raw":$raws,"steal_sec":$st,"retried":${m.retried},""" +
           s""""code_cache_mb":$cc,"jit_ms":$jt}"""
       }.mkString("{", ",", "}")
+      val layers = measured.map { case (k, m) =>
+        s""""$k":${work(k).per(m.raw.size).json}"""
+      }.mkString("{", ",", "}")
       println(s"""UPSCALE_JSON {"factor":$upscaleFactor,"iters":2,""" +
         s""""stat":"min_of_2","fresh_jvm":true,""" +
         s""""preflight":{"steal_rate_cpus_per_s":${f3(preSteal)},""" +
         s""""deferred_30s_steps":$preDeferred,"retry_budget":$baseRetries,""" +
         s""""storm_retry_budget":$stormRetries},""" +
         s""""queries_min":$upQs,"ratio_min_vs_base_median":$ratios,""" +
-        s""""attribution":$attribution}""")
+        s""""attribution":$attribution,"layers":$layers}""")
     } finally {
       // 8× fact-table parquet is GBs at the gate scale — never leak it
       java.nio.file.Files.walk(upDirPath)

@@ -345,7 +345,7 @@ object Similarity {
     * fit — the fit-once/compare-many path; they must be fit over the
     * same normalization (L2) this operator applies to the corpus side.
     */
-  def semanticDupPairs(
+  private def semanticDupPairs(
       df: DataFrame,
       idCol: String,
       vecCol: String,

@@ -79,4 +79,19 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
+
+  /** A finished SQL execution's planning and total time in seconds, from
+    * its end event. Planning is every phase the execution's own
+    * `QueryExecution` tracker measured (analysis, optimization, physical
+    * planning); the total is the execution's whole span. Both the
+    * `QueryExecution` and the span are `private[sql]` on the event. None
+    * when the event carries no `QueryExecution`.
+    */
+  def planAndTotalSeconds(
+      e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd)
+      : Option[(Double, Double)] =
+    Option(e.qe).map { qe =>
+      (qe.tracker.phases.valuesIterator.map(_.durationMs).sum / 1e3,
+        e.duration / 1e9)
+    }
 }

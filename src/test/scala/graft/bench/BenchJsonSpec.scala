@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * round-over-round comparison was lost. This spec feeds the emitter the
   * full 49-query payload plus hostile values (failed query, NaN/Inf
   * seconds, subset mode, upscale error object) and requires: exactly one
-  * line, ASCII-only bytes, a strict JSON parse, and every required key.
+  * line, ASCII-only bytes, a strict JSON parse, and every required key,
+  * including a `layers` entry per measured query.
   */
 class BenchJsonSpec extends AnyFunSuite {
 
@@ -26,12 +27,21 @@ class BenchJsonSpec extends AnyFunSuite {
 
   private def emit(results: Seq[(String, Option[Measured])],
                    only: Set[String] = Set.empty,
-                   upJson: String = ""): String =
+                   upJson: String = "",
+                   layers: Map[String, Meter.Work] = Map.empty): String =
     Bench.gateJson(results, iters = 20, warmup = 3, gateSec = 2.0,
       stealThresh = 1.0, cleanThresh = 0.15, maxRetries = 5,
       maxRetriesStorm = 12, stormStealSec = 3.0, gateChecks = 1,
       gateDeferredSteps = 0, only = only, upJson = upJson,
-      sfDir = "/root/testdata/sf0.1")._1
+      sfDir = "/root/testdata/sf0.1", layers = layers)._1
+
+  /** Totals over 20 timed runs (the emitter reports the mean per run). */
+  private def work(v: Double) = Meter.Work(planS = v, execS = v, jobs = v,
+    stages = v, tasks = v, taskCpuS = v, inputMb = v, shuffleMb = v,
+    spillMb = v)
+
+  private val layerFields = Seq("plan_s", "exec_s", "jobs", "stages",
+    "tasks", "task_cpu_s", "input_mb", "shuffle_mb", "spill_mb")
 
   private def parsed(line: String): JValue = {
     assert(!line.contains("\n") && !line.contains("\r"),
@@ -47,7 +57,8 @@ class BenchJsonSpec extends AnyFunSuite {
     "with every required key and all 49 query entries") {
     val results: Seq[(String, Option[Measured])] =
       Bench.headline.map(q => q -> Some(m(0.25, 0.9)))
-    val j = parsed(emit(results))
+    val j = parsed(emit(results,
+      layers = Bench.headline.map(_ -> work(40.0)).toMap))
     for (k <- Seq("metric", "value", "unit", "queries", "stats", "iters",
         "warmup", "worst_max", "raw_worst_max", "outliers_retried",
         "gate_class", "gate_preflight", "outlier_policy", "pass_max_lt_2s",
@@ -67,6 +78,13 @@ class BenchJsonSpec extends AnyFunSuite {
       assert(stats.head._2 \ f != JNothing, s"stats field '$f' missing")
     assert((j \ "gate_class") == JString("pass"))
     assert((j \ "pass_max_lt_2s") == JBool(true))
+    val layers = (j \ "layers").asInstanceOf[JObject].obj
+    assert(layers.map(_._1).toSet == Bench.headline.toSet,
+      "every measured query has a layers entry")
+    layers.foreach { case (k, v) =>
+      for (f <- layerFields)
+        assert(v \ f == JDouble(2.0), s"layers '$k' field '$f': mean of 40 over 20 runs")
+    }
   }
 
   test("hostile values stay inside the contract: failed query, " +
@@ -77,7 +95,10 @@ class BenchJsonSpec extends AnyFunSuite {
       "q_nan" -> Some(m(Double.NaN, Double.PositiveInfinity)),
       "q_breach" -> Some(m(1.0, 3.5)))
     val line = emit(results,
-      upJson = ""","upscale":{"error":"boom  went the probe"}""")
+      upJson = ""","upscale":{"error":"boom  went the probe"}""",
+      layers = Map("q_ok" -> work(20.0), "q_failed" -> work(20.0),
+        "q_nan" -> work(Double.NaN).copy(execS = Double.PositiveInfinity),
+        "q_breach" -> work(20.0)))
     val j = parsed(line)
     // NaN/Inf must degrade to the -1 sentinel, not break the parse
     assert((j \ "queries" \ "q_nan") == JDouble(-1.0))
@@ -89,6 +110,11 @@ class BenchJsonSpec extends AnyFunSuite {
     // contaminated
     assert((j \ "gate_class") == JString("slow"))
     assert((j \ "upscale" \ "error") == JString("boom  went the probe"))
+    assert((j \ "layers" \ "q_failed") == JNothing,
+      "a failed query has no layers entry")
+    assert((j \ "layers" \ "q_nan" \ "plan_s") == JDouble(-1.0))
+    assert((j \ "layers" \ "q_nan" \ "exec_s") == JDouble(-1.0))
+    assert((j \ "layers" \ "q_ok" \ "jobs") == JDouble(1.0))
   }
 
   test("subset mode is marked and sorted") {
