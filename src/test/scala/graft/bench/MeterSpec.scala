@@ -1,6 +1,7 @@
 package graft.bench
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -50,13 +51,19 @@ class MeterSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("a read right after each action already holds all of its events") {
+    // a listener that holds up the shared bus on every job start, so each
+    // action returns while its stage events still queue behind it
+    val lag = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = Thread.sleep(300)
+    }
+    spark.sparkContext.addSparkListener(lag)
     // the same plan each run: a read that missed the last run's late
     // events would show fewer jobs or stages than runs × the first run's
-    val reads = (1 to 3).map { _ =>
+    val reads = try (1 to 3).map { _ =>
       runIn("MeterSpec-repeat")(
         spark.range(0, 20000, 1, 4).groupBy(col("id") % 5).count())
       counter.read()("MeterSpec-repeat")
-    }
+    } finally spark.sparkContext.removeSparkListener(lag)
     val first = reads.head
     assert(first.jobs >= 1 && first.stages >= 2, s"$first")
     reads.zipWithIndex.foreach { case (w, i) =>
