@@ -13,8 +13,8 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
 object Meter {
 
   /** Format a seconds (or count) value for a JSON line. Non-finite values
-    * (which valid JSON cannot carry and which would silently kill the
-    * driver's parse of the WHOLE artifact) degrade to the same -1.0
+    * (which valid JSON cannot carry and which would silently break any
+    * parse of the WHOLE artifact) degrade to the same -1.0
     * sentinel a failed query reports — a measurement can never be NaN/Inf
     * unless the clock or stats code is broken, and one poisoned number
     * must not cost the round its comparison baseline.

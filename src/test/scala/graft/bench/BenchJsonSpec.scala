@@ -32,8 +32,8 @@ class BenchJsonSpec extends AnyFunSuite {
     Bench.gateJson(results, iters = 20, warmup = 3, gateSec = 2.0,
       stealThresh = 1.0, cleanThresh = 0.15, maxRetries = 5,
       maxRetriesStorm = 12, stormStealSec = 3.0, gateChecks = 1,
-      gateDeferredSteps = 0, only = only, upJson = upJson,
-      sfDir = "/root/testdata/sf0.1", layers = layers)._1
+      gateDeferredSteps = 0, only = only, upJson = upJson, layers = layers,
+      sfDir = "/root/testdata/sf0.1")._1
 
   /** Totals over 20 timed runs (the emitter reports the mean per run). */
   private def work(v: Double) = Meter.Work(planS = v, execS = v, jobs = v,
