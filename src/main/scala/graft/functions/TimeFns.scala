@@ -37,6 +37,14 @@ object TimeFns {
     */
   def seasonYear(ts: Column): Column = year(add_months(ts, 1))
 
+  /** Rows whose `ts` lies in [start, end], both bounds cast to timestamp
+    * by Spark (`2020`, `2020-01` and `2020-01-15 06:00` all cast). Under
+    * ANSI mode a bound that does not cast fails the query when it is
+    * planned; the HTTP server rejects such bounds before (a 422).
+    */
+  def inTimeWindow(ts: Column, start: String, end: String): Column =
+    ts.between(lit(start).cast("timestamp"), lit(end).cast("timestamp"))
+
   /** Epoch seconds (with fraction) from a timestamp column. The extra
     * timestamp cast handles TIMESTAMP_NTZ parquet columns (cannot cast NTZ
     * to double directly); under the UTC session timezone it is value-

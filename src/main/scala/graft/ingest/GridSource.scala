@@ -56,7 +56,7 @@ object GridSource {
       // convention the grid reader (GridCube.parseInstantMicros) already
       // follows for the same inputs
       Seq(s, e).foreach(b => GridCube.parseInstantMicros(b))
-      df = df.where(col(tsCol).between(lit(s).cast("timestamp"), lit(e).cast("timestamp")))
+      df = df.where(TimeFns.inTimeWindow(col(tsCol), s, e))
     }
     bbox.foreach(b => df = applyBBox(df, b, latCol, lonCol))
     df

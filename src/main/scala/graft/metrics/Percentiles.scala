@@ -1,5 +1,6 @@
 package graft.metrics
 
+import graft.functions.TimeFns
 import graft.model.{CfAttrs, SeriesSpec}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -24,7 +25,7 @@ object Percentiles {
 
   private def restrict(df: DataFrame, spec: SeriesSpec, period: Option[(String, String)]): DataFrame =
     period.fold(df) { case (s, e) =>
-      df.where(col(spec.tsCol).between(lit(s).cast("timestamp"), lit(e).cast("timestamp")))
+      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
     }
 
   /** A5 — percentile thresholds per (climatological group, cell)

@@ -92,7 +92,7 @@ object Temporal {
   ): DataFrame = {
     spec.validate(df)
     val in = referencePeriod.fold(df) { case (s, e) =>
-      df.where(col(spec.tsCol).between(lit(s).cast("timestamp"), lit(e).cast("timestamp")))
+      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
     }
     val out = in
       .groupBy(keyed(spec, group.expr(col(spec.tsCol)))(group.name): _*)

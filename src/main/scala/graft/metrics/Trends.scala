@@ -30,7 +30,7 @@ object Trends {
   ): DataFrame = {
     spec.validate(df)
     val in = referencePeriod.fold(df) { case (s, e) =>
-      df.where(col(spec.tsCol).between(lit(s).cast("timestamp"), lit(e).cast("timestamp")))
+      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
     }
     val out = in.groupBy(spec.keyCols.map(col): _*)
       .agg(regr_slope(col(spec.valueCol), TimeFns.fractionalYears(col(spec.tsCol)))

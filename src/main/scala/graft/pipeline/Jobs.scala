@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.functions.TimeFns
 import graft.ingest.{BBox, GridSource}
 import graft.metrics._
 import graft.model.SeriesSpec
@@ -34,7 +35,7 @@ object Jobs {
   def interpret(df: DataFrame, spec: SeriesSpec, ops: Seq[Op]): DataFrame =
     ops.foldLeft(df) {
       case (d, SliceTime(s, e)) =>
-        d.where(col(spec.tsCol).between(lit(s).cast("timestamp"), lit(e).cast("timestamp")))
+        d.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
       case (d, SliceRegion(b)) => GridSource.applyBBox(d, b)
       case (d, Resample("monthly")) => Temporal.monthlyMean(d, spec)
       case (d, Resample("seasonal")) => Temporal.seasonalMean(d, spec)

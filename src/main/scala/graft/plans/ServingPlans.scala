@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   BinaryComparison, Expression, LeafExpression, Literal}
@@ -26,11 +25,10 @@ import org.apache.spark.sql.types._
   * of the plan the server renders, which Spark runs outside generated
   * code (see [[graft.serve.Server]]).
   *
-  * [[install]] adds [[ServingStrategy]] to a live session through
-  * `spark.experimental.extraStrategies` (as [[AsOfMerge.install]] does).
-  * It is session-wide: once installed, every later query of the session
-  * is planned with it. Results do not change — the bound value is the
-  * literal's value.
+  * [[graft.serve.Server]] appends [[ServingStrategy]] to the
+  * `experimental.extraStrategies` of its own clone of the caller's
+  * session, so only the server's queries are planned with it. Results do
+  * not change — the bound value is the literal's value.
   */
 object ServingPlans {
 
@@ -83,11 +81,5 @@ object ServingPlans {
       FileSourceStrategy(plan).map(_.transform {
         case f: FilterExec => f.copy(condition = bindComparisonLiterals(f.condition))
       })
-  }
-
-  def install(spark: SparkSession): Unit = synchronized {
-    val em = spark.experimental
-    if (!em.extraStrategies.contains(ServingStrategy))
-      em.extraStrategies = em.extraStrategies :+ ServingStrategy
   }
 }

@@ -1,5 +1,6 @@
 package graft.serve
 
+import graft.functions.TimeFns
 import graft.ingest.{BBox, GridSource}
 import graft.model.SeriesSpec
 import org.apache.spark.sql.DataFrame
@@ -12,7 +13,12 @@ import org.apache.spark.sql.functions._
   * and 8,760 time steps per request — enforced as `limit()` guards so a
   * misbehaving client cannot trigger an unbounded collect.
   *
-  * Request values enter the plans as literals (the snapped cell's range,
+  * Point routes snap to the nearest STORED latitude and longitude
+  * ([[nearestCell]]). The first request on a dataset collects each axis's
+  * distinct coordinates once; later requests search them on the driver
+  * and run no Spark job before their own scan, on any grid.
+  *
+  * Request values enter the plans as literals (the snapped cell,
   * bbox edges, time bounds). Under [[Server]] they are bound, not inlined,
   * in the generated code of the post-scan filter: see
   * [[graft.plans.ServingPlans]]. The pushed parquet filters are planned
@@ -27,131 +33,33 @@ object Api {
   val MaxPointsPerRequest = 10000
   val MaxTimeSteps = 8760
 
-  /** Geometry of one coordinate axis: distinct-value count, extent, and
-    * whether the values form a REGULAR (evenly spaced) ladder. For a
-    * regular axis the nearest cell is pure arithmetic — no Spark job.
+  /** One dataset's ladders, probed at most once at a time: concurrent
+    * first requests wait on the slot while the first runs the probe
+    * (single-flight). A failed probe leaves the slot empty, so the next
+    * request retries.
     */
-  final case class AxisMeta(n: Long, min: Double, max: Double, regular: Boolean) {
-    def res: Double = if (n > 1) (max - min) / (n - 1) else 0.0
-    /** Nearest ladder value to `v` (ties toward the smaller coordinate,
-      * matching `orderBy(abs(c-v), c)`); None when the axis is irregular.
-      */
-    def snap(v: Double): Option[Double] =
-      if (!regular) None
-      else if (n <= 1) Some(min)
-      else {
-        val p = (v - min) / res
-        val idx = math.min(n - 1, math.max(0L, math.ceil(p - 0.5).toLong))
-        Some(min + idx * res)
-      }
-  }
-
-  final case class GridMeta(lat: AxisMeta, lon: AxisMeta)
-
-  /** Probe both axes without ever collecting a coordinate vector. First
-    * aggregate: each axis's distinct ladder (explode both coordinates
-    * into (axis, v) pairs, distinct with map-side combine — the shuffle
-    * carries per-partition ladders, not rows) reduced to count, extent,
-    * sum, and sum of squares, compared against the arithmetic-progression
-    * closed forms
-    *   sum   = n(min+max)/2
-    *   sumSq = n·min² + min·res·n(n−1) + res²·(n−1)n(2n−1)/6
-    * as a FAST REJECT. Matching moments do NOT certify an AP (for n ≥ 5
-    * a one-parameter family of irregular ladders shares n/min/max/Σv/Σv²
-    * with the AP), so axes that pass get a second, certifying aggregate:
-    * max |v − nearest lattice point| must sit inside the snap tolerance
-    * and the rounded lattice indices must be distinct — that IS the
-    * definition of the ladder snap() assumes. Both jobs run once per
-    * registered dataset (cached); serving stays zero-job.
-    * (The moments must be taken over DISTINCT LADDER VALUES — a
-    * sum_distinct of v² would collapse symmetric ±v pairs.)
-    */
-  def gridMeta(df: DataFrame, latCol: String = "lat",
-               lonCol: String = "lon"): GridMeta = {
-    val v = col("p.v")
-    def ladder = df
-      .select(explode(array(
-        struct(lit(0).as("axis"), col(latCol).cast("double").as("v")),
-        struct(lit(1).as("axis"), col(lonCol).cast("double").as("v")))).as("p"))
-      .where(v.isNotNull)
-      .groupBy(col("p.axis").as("axis"), v.as("v")).agg(count(lit(1)))
-    val byAxis = ladder
-      .groupBy(col("axis"))
-      .agg(count(lit(1)).as("n"), min(col("v")).as("mn"), max(col("v")).as("mx"),
-        sum(col("v")).as("s"), sum(col("v") * col("v")).as("sq"))
-      .collect().map(r => r.getInt(0) -> r).toMap
-    final case class Probe(n: Long, mn: Double, mx: Double, momentsOk: Boolean)
-    def probe(i: Int): Probe = byAxis.get(i) match {
-      case None => Probe(0, Double.NaN, Double.NaN, momentsOk = false)
-      case Some(r) =>
-        val n = r.getLong(1)
-        val (mn, mx) = (r.getDouble(2), r.getDouble(3))
-        val (s, sq) = (r.getDouble(4), r.getDouble(5))
-        val ok = n <= 2 || {
-          val res = (mx - mn) / (n - 1)
-          val sAP = n * (mn + mx) / 2.0
-          val sqAP = n * mn * mn + mn * res * n * (n - 1) +
-            res * res * (n - 1.0) * n * (2.0 * n - 1) / 6.0
-          math.abs(s - sAP) <= 1e-9 * math.max(1.0, math.abs(sAP)) &&
-            math.abs(sq - sqAP) <= 1e-9 * math.max(1.0, math.abs(sqAP))
-        }
-        Probe(n, mn, mx, ok)
-    }
-    val p0 = probe(0); val p1 = probe(1)
-    // certification pass over the moment-matching axes with n > 2
-    val need = Seq(0 -> p0, 1 -> p1).filter { case (_, p) => p.momentsOk && p.n > 2 }
-    val certified: Map[Int, Boolean] =
-      if (need.isEmpty) Map.empty
-      else {
-        val mnC = need.map { case (i, p) => (i, p.mn) }.toMap
-        val resC = need.map { case (i, p) => (i, (p.mx - p.mn) / (p.n - 1)) }.toMap
-        def perAxis(c: Map[Int, Double]) =
-          when(col("axis") === 0, lit(c.getOrElse(0, Double.NaN)))
-            .otherwise(lit(c.getOrElse(1, Double.NaN)))
-        val idx = round((col("v") - perAxis(mnC)) / perAxis(resC))
-        val dev = abs(col("v") - (perAxis(mnC) + idx * perAxis(resC)))
-        ladder
-          .where(col("axis").isin(need.map(_._1): _*))
-          .select(col("axis"), col("v"), idx.as("idx"), dev.as("dev"))
-          .groupBy(col("axis"))
-          .agg(max(col("dev")).as("maxDev"),
-            countDistinct(col("idx")).as("nIdx"), count(lit(1)).as("n"))
-          .collect().map { r =>
-            val i = r.getInt(0)
-            val res = resC(i)
-            r.getInt(0) -> (r.getDouble(1) <= 1e-6 * math.abs(res) &&
-              r.getLong(2) == r.getLong(3))
-          }.toMap
-      }
-    def axis(i: Int, p: Probe): AxisMeta = AxisMeta(p.n, p.mn, p.mx,
-      regular = p.momentsOk && (p.n <= 2 || certified.getOrElse(i, false)))
-    GridMeta(axis(0, p0), axis(1, p1))
-  }
-
-  /** One dataset's geometry, probed at most once at a time: concurrent
-    * first requests wait on the slot while the first runs the two-job
-    * probe (single-flight). A failed probe leaves the slot empty, so the
-    * next request retries.
-    */
-  private final class MetaSlot {
-    private var meta: GridMeta = _
-    def get(probe: => GridMeta): GridMeta = synchronized {
-      if (meta == null) meta = probe
-      meta
+  private final class LadderSlot {
+    private var ladders: Ladders = _
+    def get(probe: => Ladders): Ladders = synchronized {
+      if (ladders == null) ladders = probe
+      ladders
     }
   }
 
-  /** Per-JVM grid-geometry cache keyed by the CANONICALIZED logical plan
+  /** Each axis's distinct stored coordinates, sorted ascending. */
+  private final case class Ladders(lat: Array[Double], lon: Array[Double])
+
+  /** Per-JVM ladder cache keyed by the CANONICALIZED logical plan
     * (structural equality — no hash-collision wrongness) + axis columns.
-    * Grid geometry is immutable for a registered dataset: appending time
-    * steps never changes the lat/lon ladder. If spatial tiles are added,
-    * call [[invalidateGridMeta]].
+    * The ladders are immutable for a registered dataset: appending time
+    * steps never changes them. If spatial tiles are added, call
+    * [[invalidateGridMeta]].
     */
   private val metaCache =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[(Any, String, String), MetaSlot](64, 0.75f, true) {
+      new java.util.LinkedHashMap[(Any, String, String), LadderSlot](64, 0.75f, true) {
         override def removeEldestEntry(
-            e: java.util.Map.Entry[(Any, String, String), MetaSlot]): Boolean =
+            e: java.util.Map.Entry[(Any, String, String), LadderSlot]): Boolean =
           size() > 128
       })
 
@@ -159,50 +67,65 @@ object Api {
 
   private val probes = new java.util.concurrent.atomic.AtomicLong
 
-  /** Geometry probes actually run (test observability for cache hits). */
+  /** Ladder probes actually run (test observability for cache hits). */
   private[serve] def probeCount: Long = probes.get
 
-  private def cachedMeta(df: DataFrame, latCol: String, lonCol: String): GridMeta = {
+  /** A dataset's ladders, probed by one job on a cache miss: explode both
+    * coordinates into (axis, v) pairs, keep the distinct non-null,
+    * non-NaN ones and collect them. The driver holds as many doubles as
+    * the grid has distinct latitudes plus distinct longitudes, whatever
+    * the length of the time axis: 18 + 36 on a 10° global grid, about
+    * 54,000 on a 0.01° one.
+    */
+  private def cachedLadders(df: DataFrame, latCol: String, lonCol: String): Ladders = {
     val key = (df.queryExecution.logical.canonicalized, latCol, lonCol)
-    metaCache.computeIfAbsent(key, _ => new MetaSlot).get {
+    metaCache.computeIfAbsent(key, _ => new LadderSlot).get {
       probes.incrementAndGet()
-      gridMeta(df, latCol, lonCol)
+      val v = col("p.v")
+      val pairs = df
+        .select(explode(array(
+          struct(lit(0).as("axis"), col(latCol).cast("double").as("v")),
+          struct(lit(1).as("axis"), col(lonCol).cast("double").as("v")))).as("p"))
+        .where(v.isNotNull && !isnan(v))
+        .select(col("p.axis"), v)
+        .distinct().collect()
+      def axis(i: Int): Array[Double] = pairs
+        .collect { case r if r.getInt(0) == i => r.getDouble(1) }
+        .sorted(Ordering.Double.TotalOrdering)
+      Ladders(axis(0), axis(1))
+    }
+  }
+
+  /** The stored coordinate nearest to `v`, ties to the smaller one: the
+    * first row of `orderBy(abs(c − v), c)` over the distinct coordinates.
+    * Only the two neighbours of `v`'s insertion point can be nearest.
+    */
+  private def nearest(ladder: Array[Double], v: Double, c: String): Double = {
+    if (ladder.isEmpty) throw new NoSuchElementException(s"no stored $c coordinates")
+    val i = java.util.Arrays.binarySearch(ladder, v)
+    if (i >= 0) ladder(i)
+    else {
+      val hi = -i - 1 // the first stored value above v
+      if (hi == ladder.length ||
+          hi > 0 && math.abs(ladder(hi - 1) - v) <= math.abs(ladder(hi) - v)) ladder(hi - 1)
+      else ladder(hi)
     }
   }
 
   /** P4 — nearest grid cell to (lat, lon), per-axis like xarray
-    * `sel(method="nearest")`: nearest distinct lat, nearest distinct lon,
-    * ties broken toward the smaller coordinate.
-    *
-    * Serving path: the first request probes the grid geometry with ONE
-    * aggregate job ([[gridMeta]], cached per dataset); every later request
-    * on a REGULAR grid snaps arithmetically — zero jobs before the series
-    * scan itself. Irregular axes fall back to a distinct+sort scan, the
-    * only case where per-request coordinate jobs are still paid.
+    * `sel(method="nearest")`: the nearest STORED lat and lon, ties toward
+    * the smaller coordinate. After the dataset's first request (one probe
+    * job), a binary search on the driver: no job, on any grid.
     */
   def nearestCell(df: DataFrame, lat: Double, lon: Double,
-                  latCol: String = "lat", lonCol: String = "lon"): (Double, Double) =
-    snapCell(df, cachedMeta(df, latCol, lonCol), lat, lon, latCol, lonCol)
-
-  private def snapCell(df: DataFrame, meta: GridMeta, lat: Double, lon: Double,
-                       latCol: String, lonCol: String): (Double, Double) = {
-    def scanNearest(c: String, v: Double): Double =
-      df.select(col(c)).distinct()
-        .orderBy(abs(col(c) - v), col(c))
-        .head().getDouble(0)
-    (meta.lat.snap(lat).getOrElse(scanNearest(latCol, lat)),
-      meta.lon.snap(lon).getOrElse(scanNearest(lonCol, lon)))
+                  latCol: String = "lat", lonCol: String = "lon"): (Double, Double) = {
+    val l = cachedLadders(df, latCol, lonCol)
+    (nearest(l.lat, lat, latCol), nearest(l.lon, lon, lonCol))
   }
 
-  /** P4 — time series at a point: snap to the nearest cell, then an
-    * equality+range filter that pushes down to the scan. Output capped at
+  /** P4 — time series at a point: snap to the nearest cell, then a
+    * range filter that pushes down to the scan. Output capped at
     * [[MaxTimeSteps]] rows.
-    *
-    * Regular grids match the snapped coordinate with an ulp-scale
-    * tolerance (res·1e-6): the arithmetic snap can differ from the stored
-    * double in the last bit when the file's coordinates were accumulated
-    * differently (float32 ladders, 0.1° steps). Rows still carry the
-    * STORED coordinates, so outputs are exact either way.
     */
   def pointSeries(
       df: DataFrame,
@@ -214,7 +137,7 @@ object Api {
       lonCol: String = "lon"
   ): DataFrame = {
     val in = timeRange.fold(df) { case (s, e) =>
-      df.where(col(spec.tsCol).between(lit(s).cast("timestamp"), lit(e).cast("timestamp")))
+      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
     }
     in.where(cellFilter(df, lat, lon, latCol, lonCol))
       .select(col(spec.tsCol), col(latCol), col(lonCol), col(spec.valueCol))
@@ -222,25 +145,16 @@ object Api {
       .limit(MaxTimeSteps)
   }
 
-  /** The snapped-cell predicate every point-scoped route shares: nearest
-    * cell per axis, matched with the ulp-scale tolerance on REGULAR axes
-    * (see [[pointSeries]]'s note — the arithmetic snap can differ from
-    * the stored double in the last bits on float32/accumulated ladders;
-    * an exact === there silently matches ZERO rows) and exact equality on
-    * irregular axes (the snap IS a stored value there). Range form, not
-    * abs(): plain comparisons push down to the scan.
+  /** The snapped-cell predicate every point-scoped route shares: each
+    * axis's nearest STORED value, matched exactly by the zero-width range
+    * `c BETWEEN v AND v`, which pushes down to the parquet scan as a
+    * `GreaterThanOrEqual`/`LessThanOrEqual` pair.
     */
   def cellFilter(df: DataFrame, lat: Double, lon: Double,
                  latCol: String = "lat", lonCol: String = "lon")
       : org.apache.spark.sql.Column = {
-    val meta = cachedMeta(df, latCol, lonCol)
-    val (nlat, nlon) = snapCell(df, meta, lat, lon, latCol, lonCol)
-    def cellMatch(c: String, snapped: Double, axis: AxisMeta) =
-      if (axis.regular && axis.n > 1) {
-        val tol = math.abs(axis.res) * 1e-6
-        col(c) >= snapped - tol && col(c) <= snapped + tol
-      } else col(c) === snapped
-    cellMatch(latCol, nlat, meta.lat) && cellMatch(lonCol, nlon, meta.lon)
+    val (nlat, nlon) = nearestCell(df, lat, lon, latCol, lonCol)
+    col(latCol).between(nlat, nlat) && col(lonCol).between(nlon, nlon)
   }
 
   /** A11 — global summary per value column: mean/std/min/max/p5/p95
@@ -271,7 +185,7 @@ object Api {
       lonCol: String = "lon"
   ): DataFrame = {
     val sliced = timeRange.fold(df) { case (s, e) =>
-      df.where(col(spec.tsCol).between(lit(s).cast("timestamp"), lit(e).cast("timestamp")))
+      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
     }
     val v = col(spec.valueCol)
     GridSource.applyBBox(sliced, bbox, latCol, lonCol).agg(

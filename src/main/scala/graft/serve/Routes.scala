@@ -123,10 +123,9 @@ object Routes {
       val (df, spec) = entry
       val scoped = (req.lat, req.lon) match {
         case (Some(la), Some(lo)) =>
-          // the SHARED snapped-cell predicate (Api.cellFilter): regular
-          // axes match with the ulp-scale tolerance — an exact === here
-          // returned ZERO rows on certified-regular grids whose stored
-          // coordinates differ from the arithmetic snap in the last bits
+          // the SHARED snapped-cell predicate (Api.cellFilter): the
+          // nearest STORED lat and lon, each matched by a zero-width
+          // closed range, so the cell's rows match whatever the spacing
           df.where(Api.cellFilter(df, la, lo,
             latCol = spec.keyCols.head, lonCol = spec.keyCols(1)))
         case _ => df

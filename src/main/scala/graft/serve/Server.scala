@@ -5,7 +5,9 @@ import graft.ingest.BBox
 import graft.model.SeriesSpec
 import graft.plans.ServingPlans
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
 import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.TimestampType
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -42,13 +44,14 @@ import java.nio.charset.StandardCharsets
   * `df.toJSON` uses, writing internal rows directly: [[Bridge.jsonRows]]),
   * taken through `toLocalIterator` only after the cap.
   *
-  * Serving compiles once per route SHAPE, not once per request: `start`
-  * installs [[graft.plans.ServingPlans]] on the session. Spark inlines
-  * primitive literals into whole-stage generated Java, so each fresh
-  * lat/lon, bbox or time range used to be new source text and a Janino
-  * compile (2–4 classes per cold request); the strategy binds the
-  * post-scan filter's comparison literals into the class's references
-  * instead. The strategy stays installed for the whole session.
+  * Serving compiles once per route SHAPE, not once per request: the
+  * server plans in its own clone of the caller's session, with
+  * [[graft.plans.ServingPlans]] appended to the clone's strategies only.
+  * Spark inlines primitive literals into whole-stage generated Java, so
+  * each fresh lat/lon, bbox or time range used to be new source text and
+  * a Janino compile (2–4 classes per cold request); the strategy binds
+  * the post-scan filter's comparison literals into the class's references
+  * instead. The caller's session plans as before.
   *
   * The row cap is outside generated code too. `df.limit(cap).toJSON` put
   * the limit under `toJSON`'s map, inside a generated stage, and Spark
@@ -143,8 +146,8 @@ object Server {
 
   /** Start serving `registry` (dataset id → (table, series spec)) on
     * `port` (0 = ephemeral). Returns the running server; callers own its
-    * lifecycle — `stop()` releases the socket, the SparkSession is not
-    * touched.
+    * lifecycle — `stop()` releases the socket. The SparkSession is not
+    * touched: the server plans each registered frame in a clone of it.
     */
   def start(
       spark: SparkSession,
@@ -157,7 +160,12 @@ object Server {
       // failures degrade to compute via ResilientCache, never to a 500.
       cacheBackend: Option[Cache.CacheBackend] = None
   ): Running = {
-    ServingPlans.install(spark)
+    val session = Bridge.cloneSession(spark)
+    session.experimental.extraStrategies =
+      session.experimental.extraStrategies :+ ServingPlans.ServingStrategy
+    val datasets = registry.map { case (id, (df, spec)) =>
+      id -> (Bridge.ofRows(session, Bridge.analyzed(df)), spec)
+    }
     val backend = cacheBackend.getOrElse(
       new Cache.LruBackend(maxEntries = 1024, ttlSeconds = cacheTtlSeconds))
     val cache = new Cache.ResilientCache(backend, ttlSeconds = cacheTtlSeconds)
@@ -175,7 +183,7 @@ object Server {
     }
 
     def entryOr404(id: String): (DataFrame, SeriesSpec) =
-      registry.getOrElse(id, throw HttpError(404, s"Dataset not found: $id"))
+      datasets.getOrElse(id, throw HttpError(404, s"Dataset not found: $id"))
 
     def latLon(params: Map[String, String]): (Double, Double) = {
       val lat = dbl(params, "lat").getOrElse(throw HttpError(422, "lat is required"))
@@ -185,13 +193,27 @@ object Server {
       (lat, lon)
     }
 
-    def timeRange(params: Map[String, String]): Option[(String, String)] =
-      (params.get("start_date"), params.get("end_date")) match {
-        case (Some(s), Some(e)) => Some((s, e))
-        case (None, None) => None
-        case _ => throw HttpError(422,
-          "start_date and end_date must be given together")
+    /** A time window from two parameters given together. Each bound must
+      * pass Spark's own timestamp cast, run here in TRY mode under the
+      * session time zone (no job): under ANSI mode the plan's cast fails.
+      */
+    def period(params: Map[String, String], from: String, to: String)
+        : Option[(String, String)] = {
+      val tz = Some(session.conf.get("spark.sql.session.timeZone"))
+      def bound(name: String, v: String): String = {
+        require422(Cast(Literal(v), TimestampType, tz, EvalMode.TRY).eval() != null,
+          s"$name must be a date or timestamp, got '$v'")
+        v
       }
+      (params.get(from), params.get(to)) match {
+        case (Some(s), Some(e)) => Some((bound(from, s), bound(to, e)))
+        case (None, None) => None
+        case _ => throw HttpError(422, s"$from and $to must be given together")
+      }
+    }
+
+    def timeRange(params: Map[String, String]): Option[(String, String)] =
+      period(params, "start_date", "end_date")
 
     def bboxOpt(params: Map[String, String]): Option[BBox] = {
       val parts = Seq("min_lon", "min_lat", "max_lon", "max_lat")
@@ -214,7 +236,7 @@ object Server {
 
     // STAC documents exist for the spatio-temporal datasets only
     // (a grid = at least (lat, lon) key columns)
-    val stacIds: Seq[String] = registry.toSeq.sortBy(_._1)
+    val stacIds: Seq[String] = datasets.toSeq.sortBy(_._1)
       .collect { case (id, (_, spec)) if spec.keyCols.length >= 2 => id }
 
     def stacEntry(id: String): (DataFrame, SeriesSpec) = {
@@ -250,20 +272,13 @@ object Server {
       val params = queryParams(ex)
       val req = Routes.MetricRequest(id, metric,
         lat = dbl(params, "lat"), lon = dbl(params, "lon"),
-        referencePeriod = (params.get("ref_start"), params.get("ref_end")) match {
-          case (Some(s), Some(e)) => Some((s, e))
-          case (None, None) => None
-          // mirror timeRange(): a half-specified pair is a validation
-          // error, not a silent ignore
-          case _ => throw HttpError(422,
-            "ref_start and ref_end must be given together")
-        })
+        // a half-specified pair is a validation error, not a silent ignore
+        referencePeriod = period(params, "ref_start", "ref_end"))
       // dispatch INSIDE the cache lookup: a cache hit must not pay the
-      // route's plan-building work (on irregular grids the point snap is
-      // two Spark jobs per request); errors throw before anything is
+      // route's plan-building work; errors throw before anything is
       // stored, so 404/422s are never cached
       cached(ex) {
-        Routes.metricRoute(spark, registry, req) match {
+        Routes.metricRoute(session, datasets, req) match {
           case Left(Routes.NotFound(m)) => throw HttpError(404, m)
           case Left(Routes.InvalidParam(m)) => throw HttpError(422, m)
           case Right(df) =>
@@ -293,7 +308,7 @@ object Server {
           200 -> jobj("status" -> jstr(h.status),
             "timestamp" -> jstr(h.timestamp), "service" -> jstr(h.service))
         case "health" :: "ready" :: Nil =>
-          val r = Routes.readinessRoute(spark)
+          val r = Routes.readinessRoute(session)
           (if (r.status == "ready") 200 else 503) -> jobj(
             "status" -> jstr(r.status), "timestamp" -> jstr(r.timestamp),
             "checks" -> jobj(r.checks.toSeq.sortBy(_._1)
@@ -316,9 +331,9 @@ object Server {
             "cache_ttl_seconds" -> cacheTtlSeconds.toString),
           "timestamp" -> jstr(nowUtc))
         case "api" :: "v1" :: "data" :: "datasets" :: Nil => 200 -> jobj(
-          "datasets" -> jarr(registry.toSeq.sortBy(_._1)
+          "datasets" -> jarr(datasets.toSeq.sortBy(_._1)
             .map { case (id, (df, spec)) => datasetJson(id, df, spec) }),
-          "count" -> registry.size.toString,
+          "count" -> datasets.size.toString,
           "timestamp" -> jstr(nowUtc))
         case "api" :: "v1" :: "data" :: "datasets" :: id :: Nil =>
           val (df, spec) = entryOr404(id)
@@ -395,7 +410,7 @@ object Server {
         // like every other data payload.
         case "stac" :: Nil =>
           200 -> cached(ex) {
-            graft.model.Catalog.stacCatalog(spark, service,
+            graft.model.Catalog.stacCatalog(session, service,
               s"$service STAC catalog", stacIds).head().getAs[String]("json")
           }
         case "stac" :: "collections" :: Nil =>

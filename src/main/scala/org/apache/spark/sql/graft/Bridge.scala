@@ -31,6 +31,14 @@ object Bridge {
   def sessionUUID(spark: org.apache.spark.sql.SparkSession): String =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
+  /** A copy of a session over the same SparkContext and cache, with its
+    * conf, functions and strategies (`newSession()` drops the runtime
+    * conf); later changes on one side miss the other (`private[sql]`).
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** The analyzed logical plan of a DataFrame — input for building custom
     * logical nodes out of already-resolved children.
     */

@@ -2,12 +2,14 @@ package graft.serve
 
 import graft.SparkSpec
 import graft.model.SeriesSpec
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.bench.Meter
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** P4 serving path: metadata-snap nearest-cell selection (regular grids
-  * snap arithmetically from a one-job geometry probe; irregular grids
-  * fall back to the distinct+sort scan) and the steady-state job count.
+/** P4 serving path: nearest-cell selection snaps to the STORED
+  * coordinates (one cached probe job per dataset collects each axis's
+  * distinct values; every request after it is a driver-side search, on
+  * regular and irregular grids alike) and the steady-state job count.
   */
 class ApiSpec extends SparkSpec {
   import spark.implicits._
@@ -23,69 +25,59 @@ class ApiSpec extends SparkSpec {
     rows.toDF("time", "lat", "lon", "v")
   }
 
+  private def irregularGrid = {
+    val rows = for {
+      t <- 0 until 3
+      la <- Seq(-10.0, 0.0, 3.0, 50.0) // uneven spacing
+      lo <- Seq(0.0, 10.0, 20.0)       // even
+    } yield (java.sql.Timestamp.valueOf(s"2020-01-0${t + 1} 00:00:00"), la, lo, la + lo)
+    rows.toDF("time", "lat", "lon", "v")
+  }
+
   test("gridMeta: regular ladders detected; snap == scan-based nearest") {
     val g = regularGrid
-    val meta = Api.gridMeta(g)
-    assert(meta.lat.regular && meta.lon.regular)
-    assert(meta.lat.n == 10 && meta.lon.n == 8)
-    assert(math.abs(meta.lat.res - 0.25) < 1e-12)
     def scanNearest(c: String, v: Double): Double =
       g.select(col(c)).distinct().orderBy(abs(col(c) - v), col(c))
         .head().getDouble(0)
     // interior, exact-cell, out-of-range (clamps), and tie probes
     for (p <- Seq(-4.43, -3.0, -2.62, -99.0, 99.0, -4.375 /* tie */ ))
-      assert(meta.lat.snap(p).contains(scanNearest("lat", p)), s"lat probe $p")
+      assert(Api.nearestCell(g, p, 100.25)._1 == scanNearest("lat", p), s"lat probe $p")
     for (p <- Seq(100.3, 101.99, 0.0, 200.0, 100.375 /* tie */ ))
-      assert(meta.lon.snap(p).contains(scanNearest("lon", p)), s"lon probe $p")
+      assert(Api.nearestCell(g, 0.0, p)._2 == scanNearest("lon", p), s"lon probe $p")
     // tie goes to the SMALLER coordinate, matching orderBy(abs, c)
-    assert(meta.lat.snap(-4.375).contains(-4.5))
+    assert(Api.nearestCell(g, -4.375, 100.25)._1 == -4.5)
   }
 
   test("gridMeta: symmetric ladders (±v pairs) are still regular") {
-    // lat -85..85 step 10 has v/-v pairs whose SQUARES collide — the
-    // moment probe must not collapse them (regression: sum_distinct(v²))
+    // lat -85..85 step 10 has v/-v pairs whose SQUARES collide; the
+    // snap must keep both of each pair
     val rows = for (la <- -85 to 85 by 10; lo <- 0 to 40 by 10)
       yield (la.toDouble, lo.toDouble, 1.0)
     val g = rows.toDF("lat", "lon", "v")
-    val meta = Api.gridMeta(g)
-    assert(meta.lat.regular && meta.lat.n == 18 && meta.lat.res == 10.0)
-    assert(meta.lat.snap(10.3).contains(15.0))
+    assert(Api.nearestCell(g, 10.3, 0.0)._1 == 15.0)
   }
 
   test("gridMeta: moment-matching impostor ladder is NOT certified regular") {
     // {0, x, 1.5, 3−x', 4} with x = 1.3486122…, x' chosen so Σv = 10 and
-    // Σv² = 30 — the exact first two moments of the AP {0,1,2,3,4}. The
-    // moment probe alone cannot tell them apart (a one-parameter family
-    // of such sets exists for n ≥ 5); the lattice-deviation certificate
-    // must reject it, or snap() would return coordinates that don't exist.
+    // Σv² = 30 — the exact first two moments of the AP {0,1,2,3,4}. An
+    // arithmetic snap from count, extent and moments would return
+    // coordinates that don't exist; the snap must land on a stored one.
     // x² + (4.5−x)² = 11.75 ⇒ 2x² − 9x + 8.5 = 0 ⇒ x = (9 − √13)/4
     val x = (9.0 - math.sqrt(13.0)) / 4
     val y = 4.5 - x
     val lats = Seq(0.0, x, 1.5, y, 4.0)
     val sq = lats.map(v => v * v).sum
-    // moments collide to machine precision, INSIDE the probe's 1e-9
-    // tolerance — only the lattice certificate can reject this ladder
+    // the moments collide to machine precision
     assert(math.abs(lats.sum - 10.0) < 1e-12)
     assert(math.abs(sq - 30.0) < 1e-12, s"fixture moment drift: $sq")
     val rows = for (la <- lats; lo <- Seq(0.0, 10.0, 20.0)) yield (la, lo, 1.0)
     val g = rows.toDF("lat", "lon", "v")
-    val meta = Api.gridMeta(g)
-    assert(!meta.lat.regular, "impostor ladder must not certify as regular")
-    assert(meta.lon.regular)
-    assert(Api.nearestCell(g, 1.0, 8.0) == ((x, 10.0)), "scan fallback finds the true cell")
+    assert(Api.nearestCell(g, 1.0, 8.0) == ((x, 10.0)), "the snap finds the true cell")
   }
 
   test("gridMeta: irregular axis detected; nearestCell falls back to the scan") {
-    val rows = for {
-      la <- Seq(-10.0, 0.0, 3.0, 50.0) // uneven spacing
-      lo <- Seq(0.0, 10.0, 20.0)       // even
-    } yield (la, lo, la + lo)
-    val g = rows.toDF("lat", "lon", "v")
-    val meta = Api.gridMeta(g)
-    assert(!meta.lat.regular, "uneven lat ladder must not be treated as regular")
-    assert(meta.lon.regular)
-    assert(meta.lat.snap(2.0).isEmpty)
-    // fallback still selects the true nearest cell
+    val g = irregularGrid
+    // the snap selects the true nearest cell on the uneven axis too
     assert(Api.nearestCell(g, 2.0, 8.0) == ((3.0, 10.0)))
     assert(Api.nearestCell(g, -6.0, 25.0) == ((-10.0, 20.0)))
   }
@@ -124,27 +116,43 @@ class ApiSpec extends SparkSpec {
       s"expected one probe for four concurrent first requests, ran ${Api.probeCount - before}")
   }
 
-  test("pointSeries on a regular grid: correct cell, one job per warm request") {
-    val g = regularGrid.cache()
+  /** Rows of a warm pointSeries request on `grid`, and the Spark jobs
+    * it ran, counted per job group with the Meter's read barrier.
+    */
+  private def warmRequest(grid: DataFrame, lat: Double, lon: Double)
+      : (Array[Row], Double) = {
+    val g = grid.cache()
     g.count() // materialize so the serving scan is one stage
     val spec = SeriesSpec("time", Seq("lat", "lon"), "v")
-    // warm the geometry cache (first request pays the one probe job)
+    // warm the ladder cache (the first request pays the one probe job)
     Api.invalidateGridMeta()
     Api.nearestCell(g, 0.0, 0.0)
-    var jobs = 0
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val counter = new Meter.SparkCounter(spark.sparkContext)
+    val group = s"ApiSpec-warm-${java.util.UUID.randomUUID()}"
     try {
-      val rows = Api.pointSeries(g, spec, lat = -2.62, lon = 100.3).collect()
-      // listener delivery is async; give the bus a beat to drain
-      Thread.sleep(300)
-      // steady-state serving: ONLY the series scan runs — no per-request
-      // coordinate-distinct jobs
-      assert(jobs == 1, s"expected exactly one job, saw $jobs")
-      assert(rows.length == 3)
-      assert(rows.forall(r => r.getDouble(1) == -2.5 && r.getDouble(2) == 100.25))
-    } finally spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, group)
+      val rows = try Api.pointSeries(g, spec, lat, lon).collect()
+        finally spark.sparkContext.clearJobGroup()
+      (rows, counter.read()(group).jobs)
+    } finally {
+      counter.close()
+      g.unpersist()
+    }
+  }
+
+  test("pointSeries on a regular grid: correct cell, one job per warm request") {
+    val (rows, jobs) = warmRequest(regularGrid, lat = -2.62, lon = 100.3)
+    // steady-state serving: ONLY the series scan runs — no per-request
+    // coordinate-distinct jobs
+    assert(jobs == 1, s"expected exactly one job, saw $jobs")
+    assert(rows.length == 3)
+    assert(rows.forall(r => r.getDouble(1) == -2.5 && r.getDouble(2) == 100.25))
+  }
+
+  test("pointSeries on an irregular grid: correct cell, one job per warm request") {
+    val (rows, jobs) = warmRequest(irregularGrid, lat = 2.0, lon = 8.0)
+    assert(jobs == 1, s"expected exactly one job, saw $jobs")
+    assert(rows.length == 3)
+    assert(rows.forall(r => r.getDouble(1) == 3.0 && r.getDouble(2) == 10.0))
   }
 }

@@ -3,15 +3,14 @@ package graft.serve
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Randomized nearest-cell parity: the arithmetic snap (regular grids,
-  * certified by the moment + lattice probe) and the scan fallback
-  * (irregular ladders) must both land on the naive definition — the
-  * distinct coordinate minimizing (|c − v|, c) — including EXACT
-  * midpoint queries (tie goes to the smaller coordinate on both paths:
-  * ceil(p − 0.5) picks the lower index, the scan orders by (abs, c))
-  * and out-of-extent queries (clamped to the edge cells). All
-  * coordinates and queries are dyadic (multiples of 1/8) so midpoints
-  * and snaps are bit-exact — the parity is semantic, not tolerance.
+/** Randomized nearest-cell parity: the snap to the stored coordinates
+  * (a binary search over each axis's distinct values) must land on the
+  * naive definition — the distinct coordinate minimizing (|c − v|, c) —
+  * on regular and irregular ladders alike, including EXACT midpoint
+  * queries (the tie goes to the smaller coordinate) and out-of-extent
+  * queries (clamped to the edge cells). All coordinates and queries are
+  * dyadic (multiples of 1/8) so midpoints are bit-exact — the parity is
+  * semantic, not tolerance.
   */
 class NearestFuzzSpec extends SparkSpec {
 
@@ -53,8 +52,7 @@ class NearestFuzzSpec extends SparkSpec {
   test("irregular-ladder scan path matches the naive definition incl. ties") {
     val rnd = new scala.util.Random(20260816L)
     (0 until 3).foreach { round =>
-      // random dyadic coords with uneven gaps — the moment probe must NOT
-      // certify these as regular, forcing the scan path
+      // random dyadic coords with uneven gaps
       def ladder(n: Int, lo: Int): Seq[Double] =
         Seq.fill(n + 4)(lo + rnd.nextInt(64) / 8.0 * 3).distinct.sorted
       val lats = ladder(6 + round, -40)

@@ -56,10 +56,9 @@ class RoutesSpec extends SparkSpec {
     "coordinates differ from the arithmetic snap in the last bits") {
     import org.apache.spark.sql.functions._
     // one rung of the lat ladder stored 1e-9 off the arithmetic lattice
-    // (the accumulated-step / float32-origin case): gridMeta still
-    // certifies the axis regular (dev ≪ 1e-6·res), but the arithmetic
-    // snap differs from the stored double — the exact case an === cell
-    // match silently matched zero rows on
+    // (the accumulated-step / float32-origin case): an arithmetic snap
+    // would differ from the stored double, and an exact match on it
+    // would select zero rows; the snap to the stored value selects them
     val off = grid.withColumn("lat",
       when(col("lat") === 10.0, lit(10.0 + 1e-9)).otherwise(col("lat")))
     val reg = Map("off" -> (off, spec))

@@ -20,18 +20,8 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   private lazy val srv = Server.start(spark, registry)
   private val client = HttpClient.newHttpClient()
 
-  // Server.start installs the serving strategy on the session, which
-  // the suites of this JVM share: the suites after this one plan without it
-  private var strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] = Nil
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    strategies = spark.experimental.extraStrategies
-  }
-
   override def afterAll(): Unit = {
     srv.stop() // releases the socket AND shuts down the handler pool
-    spark.experimental.extraStrategies = strategies
     super.afterAll()
   }
 
@@ -139,6 +129,35 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     val half = get("/api/v1/metrics/anomaly/era5_sample?ref_start=2020-01-01")
     assert(half.statusCode() == 422)
     assert(half.body().contains("ref_start and ref_end must be given together"))
+  }
+
+  test("malformed date bounds are a 422 naming the parameter; year and month bounds pass") {
+    val badRange = get("/api/v1/data/datasets/era5_sample/point" +
+      "?lat=12&lon=33&start_date=2020-13-45&end_date=2020-12-31")
+    assert(badRange.statusCode() == 422, badRange.body())
+    assert(badRange.body().contains("start_date"))
+    val badRef = get("/api/v1/metrics/anomaly/era5_sample?lat=12&lon=33&ref_start=x&ref_end=y")
+    assert(badRef.statusCode() == 422, badRef.body())
+    assert(badRef.body().contains("ref_start"))
+    // bounds Spark's timestamp cast accepts still serve: 2020-01-01 only
+    val coarse = get("/api/v1/data/datasets/era5_sample/point" +
+      "?lat=12&lon=33&start_date=2020&end_date=2020-01")
+    assert(coarse.statusCode() == 200, coarse.body())
+    assert("\"temperature\":".r.findAllIn(coarse.body()).size == 1)
+  }
+
+  test("Server.start plans in its own session: the caller's strategies are unchanged") {
+    val before = spark.experimental.extraStrategies
+    val s2 = Server.start(spark, registry)
+    try {
+      val ok = client.send(HttpRequest.newBuilder(URI.create(
+          s"http://127.0.0.1:${s2.port}/api/v1/data/datasets/era5_sample/point?lat=-40&lon=70"))
+        .build(), HttpResponse.BodyHandlers.ofString())
+      assert(ok.statusCode() == 200)
+    } finally s2.stop()
+    assert(spark.experimental.extraStrategies == before)
+    assert(!spark.experimental.extraStrategies.contains(
+      graft.plans.ServingPlans.ServingStrategy))
   }
 
   test("a file-backed cache is shared across server instances") {

@@ -20,8 +20,7 @@ import scala.util.Random
   * the parquet scan, and no Janino compile for a fresh key of a route
   * shape already served.
   */
-class ServingPlansSpec extends SparkSpec with AdaptiveSparkPlanHelper
-    with org.scalatest.BeforeAndAfterAll {
+class ServingPlansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val spec = SeriesSpec("ts", Seq("lat", "lon"), "temperature")
   private lazy val store: DataFrame = {
@@ -99,20 +98,6 @@ class ServingPlansSpec extends SparkSpec with AdaptiveSparkPlanHelper
           east = -175.0 + rnd.nextDouble() * 10)))
       case _ => new Key(cls, lat, lon, None, None)
     }
-  }
-
-  // Server.start installs the serving strategy on the session, which
-  // the suites of this JVM share: the suites after this one plan without it
-  private var strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] = Nil
-
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    strategies = spark.experimental.extraStrategies
-  }
-
-  override def afterAll(): Unit = {
-    spark.experimental.extraStrategies = strategies
-    super.afterAll()
   }
 
   /** Run `f` with the serving strategy installed (`on`) or removed. */
