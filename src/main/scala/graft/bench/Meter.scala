@@ -23,8 +23,8 @@ object Meter {
     if (java.lang.Double.isFinite(v)) f"$v%.3f" else "-1.000"
 
   /** The Spark work of one job group: plan and exec seconds of its SQL
-    * executions, its jobs, stages and tasks, task CPU seconds, scan input,
-    * shuffle read+write and spill (memory+disk) in MB.
+    * executions, its jobs, stages and tasks, task CPU seconds, stage input
+    * bytes, shuffle read+write and spill (memory+disk) in MB.
     */
   final case class Work(planS: Double, execS: Double, jobs: Double,
                         stages: Double, tasks: Double, taskCpuS: Double,
@@ -57,6 +57,12 @@ object Meter {
     *  - jobs from job starts; stages, tasks, task CPU, input, shuffle and
     *    spill from each completed stage attempt's aggregated task metrics,
     *    attributed through the group the stage was submitted under;
+    *  - input (`input_mb`) is Spark's stage `inputMetrics.bytesRead`. For
+    *    these Parquet scans it is not a measure of scan cost: at sf0.1
+    *    q_anomaly, which scans several columns of an 11 MB
+    *    `lineitem.parquet`, reads 0.036 MB per run, and q_minhash_dedup
+    *    0.007 MB from a 0.6 MB `documents.parquet`. Reads of a cached
+    *    relation count in it;
     *  - plan and exec seconds from each root SQL execution's end event:
     *    plan is what the execution's own `QueryExecution` tracker measured
     *    (see `Bridge.planAndTotalSeconds`), exec the rest of its span. The

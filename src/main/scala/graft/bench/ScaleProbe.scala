@@ -86,12 +86,8 @@ object ScaleProbe {
       run("exact_dedup", Dedup.exactGroups(docs, "id", "text"))
       run("ngram_jaccard", Dedup.ngramJaccardPairs(docs, "id", "text",
         n = 3, threshold = 0.5))
-      // cacheGramSets: minhash reads the gram sets three times (signatures
-      // + both verify sides); with a generated (or re-scanned) input the
-      // cache is what makes those reads share one tokenize pass
       run("minhash_dedup", Dedup.minhashDedup(docs, "id", "text",
-        n = 3, numHashes = 64, bands = 32, threshold = 0.5,
-        cacheGramSets = true))
+        n = 3, numHashes = 64, bands = 32, threshold = 0.5))
       run("simhash_pairs", Dedup.simhashPairs(docs, "id", "text", maxHamming = 3))
     }
 

@@ -197,40 +197,17 @@ object Dedup {
   }
 
   /** Band buckets of a signature frame: one `(id, band, bucket)` row per
-    * (document, band), bucket = hash of the band's (position, minhash)
-    * pairs. Deterministic across sessions and partitionings (fixed-seed
-    * Murmur3 over position-sorted pairs), so buckets computed today join
-    * against buckets persisted last month ([[graft.dedup.DedupIndex]]).
-    *
-    * Two value-identical forms (same struct types int/long, same
-    * ascending-position hash input — DedupIndexSpec pins the equality,
-    * because bucket equality IS the persisted-index format):
-    *  - [[bandBuckets]] (aggregate): explode → groupBy. Its exchange is
-    *    the sharing point the [[minhashCandidates]] SELF-join reuses, so
-    *    the signature scan runs once for both sides — measured faster
-    *    there than the scan-local form + explicit repartition.
-    *  - [[bandBucketsLocal]] (scan-local): each band's struct array is
-    *    assembled in place and hashed, zero shuffle — the right shape
-    *    when the consumer doesn't self-join (the DedupIndex batch side
-    *    feeds a broadcast; measured 1.02 s → 0.73 s there).
+    * (document, band), bucket = Murmur3 `hash` of the band's
+    * `(i: int, m: long)` structs in ascending position `i`, assembled and
+    * hashed scan-locally (no shuffle). Deterministic across sessions and
+    * partitionings, so buckets computed today join against buckets
+    * persisted last month ([[graft.dedup.DedupIndex]]): bucket equality IS
+    * the persisted-index format, and DedupIndexSpec pins it against the
+    * explode → groupBy → `collect_list` form. A NULL signature (a <n-token
+    * document) emits no rows, and a band with no positions
+    * (bands > numHashes) is omitted, as in that grouped form.
     */
-  def bandBuckets(sigs: DataFrame, idCol: String, bands: Int): DataFrame =
-    sigs.select(col(idCol), posexplode(col("sig")).as(Seq("i", "m")))
-      .withColumn("band", col("i").mod(lit(bands)))
-      .groupBy(col(idCol), col("band"))
-      // sort by position before hashing: collect_list order is not
-      // deterministic across shuffles
-      .agg(hash(sort_array(collect_list(struct(col("i"), col("m"))))).as("bucket"))
-
-  /** Scan-local twin of [[bandBuckets]] — see the shared contract there.
-    * Row-set parity with the aggregate form requires two guards the
-    * explode would otherwise break: a NULL signature (empty gram set —
-    * a <n-token document) must emit NO rows (posexplode of null emits
-    * none), and a band with no positions (bands > numHashes) must be
-    * omitted (the groupBy never saw it) — hence the isNotNull filter and
-    * the `least(bands, |sig|)` sequence bound.
-    */
-  def bandBucketsLocal(sigs: DataFrame, idCol: String, bands: Int): DataFrame = {
+  def bandBuckets(sigs: DataFrame, idCol: String, bands: Int): DataFrame = {
     val banded = transform(
       sequence(lit(0), least(lit(bands - 1), size(col("sig")) - 1)), b =>
       struct(
@@ -268,30 +245,15 @@ object Dedup {
       n: Int = 3,
       numHashes: Int = 64,
       bands: Int = 32,
-      threshold: Double = 0.5,
-      cacheGramSets: Boolean = false
+      threshold: Double = 0.5
   ): DataFrame = {
     // gramSets feeds three consumers (signatures + both verification
-    // sides). The gram-hash build is SCAN-LOCAL (one fused expression, no
-    // shuffle), which means there is no exchange for ReuseExchange to
-    // share: with `cacheGramSets=false` (the library default) each
-    // consumer re-tokenizes the corpus — three scans per call, nothing
-    // outliving the query. `cacheGramSets=true` persists the frame
-    // (MEMORY_AND_DISK): ONE tokenize pass per call (and repeated calls
-    // over the same input skip it entirely) — the right setting for any
-    // corpus where the scan dominates, i.e. the 100 TB design point.
-    // Callers who opt in own the lifecycle: the cache is keyed on the
-    // canonicalized plan (CacheManager dedups), released by
-    // `df.sparkSession.catalog.clearCache()` or an unpersist of the same
-    // plan. Default off: a library operator must not leak a
-    // session-lifetime cache entry per distinct input.
-    // spread an under-parallel scan before the fused tokenize (no-op past
-    // the Fanout guard); with cacheGramSets the cached layout is parallel
-    val raw = gramHashSets(graft.operators.Fanout(df, Seq(idCol)),
+    // sides). The build is scan-local (one fused expression), so each
+    // consumer re-tokenizes the corpus and nothing outlives the query;
+    // caching is the caller's choice. Fanout spreads an under-parallel
+    // scan before the tokenize (a no-op past its guard).
+    val gramSets = gramHashSets(graft.operators.Fanout(df, Seq(idCol)),
       idCol, textCol, n)
-    val gramSets =
-      if (cacheGramSets) raw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else raw
     val sigs = minhashSignatures(gramSets, idCol, numHashes, seed = 42L)
     val cands = minhashCandidates(sigs, idCol, bands)
     // exact Jaccard on CANDIDATES ONLY — the whole point of LSH: per-doc
@@ -655,54 +617,31 @@ object Dedup {
       width: Int = 8,
       minDocFreq: Int = 2,
       maxDocFreq: Int = Int.MaxValue,
-      exactVerify: Boolean = false,
-      cacheGrams: Boolean = false
+      exactVerify: Boolean = false
   ): DataFrame = {
     require(width >= 1, s"span width must be positive, got $width")
     require(minDocFreq >= 2,
       s"minDocFreq must be >= 2 (a span repeated in one doc is not cross-document), got $minDocFreq")
-    // Uncached (default), the positional posting frame has ONE consumer
-    // (the candidate join) — the stats side runs on the fused distinct-set
-    // kernel below, so each text is tokenized once per side. With
-    // `cacheGrams=true` the posting frame is persisted and BOTH sides
-    // derive from it — one tokenize total, the right setting when the
-    // tokenize dominates (the 100 TB regime); same opt-in lifecycle
-    // contract as minhashDedup's cacheGramSets (CacheManager dedups by
-    // plan, clearCache releases). Default off: no session-lifetime cache
-    // entry per distinct input from a library operator.
-    val grams0 = df.select(col(idCol).as("id"),
+    // The positional posting frame has ONE consumer (the candidate join);
+    // the stats side runs on the fused distinct-set kernel below, so each
+    // text is tokenized once per side and nothing is persisted.
+    val grams = df.select(col(idCol).as("id"),
       posexplode(graft.plans.Expressions.text_gram_hash_seq(col(textCol), width))
         .as(Seq("pos", "gh")))
-    val grams =
-      if (cacheGrams)
-        grams0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else grams0
     // Per-gram stats see DOCUMENT frequency, not occurrence frequency —
-    // i.e. they aggregate distinct (gh, doc).
-    val stats0 =
-      if (cacheGrams)
-        // the cached posting frame already paid the tokenize; derive the
-        // distinct (gh, doc) from it (two partial-aggregated exchanges,
-        // zero extra text passes — cacheGrams=true is the regime where
-        // the tokenize dominates)
-        grams.groupBy(col("gh"), col("id")).agg(count(lit(1)).as("_occ"))
-          .groupBy(col("gh"))
-          .agg(count(lit(1)).as("df"), min(col("id")).as("keep_id"))
-      else
-        // r19 (guide §2.3/§2.4): the fused SET kernel computes the
-        // per-doc distinct grams scan-locally ([[TextGramHashes]] and the
-        // positional kernel share the tokenizer and gram-hash chain, so
-        // they agree on which grams exist) — ONE exchange of per-gram
-        // partials instead of the full distinct-(gh, id) posting shuffle
-        // followed by a second per-gram exchange. Measured at sf0.1: the
-        // stats subtree loses an exchange and a serial agg pass; the set
-        // kernel is cheaper than posexplode of the positional one.
-        df.select(col(idCol).as("id"),
-            explode(graft.plans.Expressions.text_gram_hashes(col(textCol), width))
-              .as("gh"))
-          .groupBy(col("gh"))
-          .agg(count(lit(1)).as("df"), min(col("id")).as("keep_id"))
-    val stats = stats0
+    // i.e. they aggregate distinct (gh, doc). r19 (guide §2.3/§2.4): the
+    // fused SET kernel computes the per-doc distinct grams scan-locally
+    // ([[TextGramHashes]] and the positional kernel share the tokenizer
+    // and gram-hash chain, so they agree on which grams exist) — ONE
+    // exchange of per-gram partials instead of the full distinct-(gh, id)
+    // posting shuffle followed by a second per-gram exchange. Measured at
+    // sf0.1: the stats subtree loses an exchange and a serial agg pass;
+    // the set kernel is cheaper than posexplode of the positional one.
+    val stats = df.select(col(idCol).as("id"),
+        explode(graft.plans.Expressions.text_gram_hashes(col(textCol), width))
+          .as("gh"))
+      .groupBy(col("gh"))
+      .agg(count(lit(1)).as("df"), min(col("id")).as("keep_id"))
       .where(col("df").between(minDocFreq, maxDocFreq))
       .select(col("gh"), col("keep_id"))
     val cand = grams.join(stats, Seq("gh"))
@@ -747,11 +686,10 @@ object Dedup {
       width: Int = 8,
       minDocFreq: Int = 2,
       maxDocFreq: Int = Int.MaxValue,
-      exactVerify: Boolean = false,
-      cacheGrams: Boolean = false
+      exactVerify: Boolean = false
   ): DataFrame = {
     val removals = spanRemovals(df, idCol, textCol, width, minDocFreq,
-      maxDocFreq, exactVerify, cacheGrams)
+      maxDocFreq, exactVerify)
     val starts = removals.groupBy(col("id"))
       .agg(collect_list(col("pos")).as("starts"))
     // normTokens, NOT tokens∘normalize: a blank/punct-only document

@@ -33,9 +33,9 @@ import org.apache.spark.sql.functions._
   *
   * Determinism contract: signatures are fixed-seed universal hashes over
   * fixed-seed xxhash64 gram hashes, and buckets are fixed-seed Murmur3
-  * over position-sorted minima ([[Dedup.bandBuckets]]) — so bands written
-  * by any session/partitioning join exactly against bands computed by any
-  * other. That equality IS the index format.
+  * over position-sorted minima ([[Dedup.bandBuckets]], scan-local) — so
+  * bands written by any session/partitioning join exactly against bands
+  * computed by any other. That equality IS the index format.
   *
   * Scale shape of [[query]]: the batch side (a daily increment, orders of
   * magnitude below the corpus) is BROADCAST to the persisted postings
@@ -274,7 +274,7 @@ object DedupIndex {
       // skip row groups — the point-lookup shape a small batch needs
       // against a corpus-sized store
       AtomicStore.failpoint("dedup:bands")
-      Dedup.bandBucketsLocal(sigs, idCol, p.bands)
+      Dedup.bandBuckets(sigs, idCol, p.bands)
         .select(col(idCol).as("id"), col("band"), col("bucket"))
         .sortWithinPartitions(col("bucket"))
         .write.mode("overwrite").parquet(s"$dir/bands/$tag")
@@ -430,9 +430,8 @@ object DedupIndex {
         graft.operators.Fanout(batch, Seq(idCol)), idCol, textCol, p.n)
       .select(col(idCol).as("query_id"), col("gs"))
     val sigs = Dedup.minhashSignatures(grams, "query_id", p.numHashes, p.seed)
-    // scan-local banding: the batch side feeds a broadcast, so there is no
-    // self-join exchange to reuse — zero shuffle before the candidate join
-    val qBandsLazy = Dedup.bandBucketsLocal(sigs, "query_id", p.bands)
+    // scan-local banding: zero shuffle before the candidate join
+    val qBandsLazy = Dedup.bandBuckets(sigs, "query_id", p.bands)
     // PRUNE the store scan before it starts — when the store is big
     // enough to pay for the probe: the batch's bucket set is tiny
     // (≤ batch_rows × bands 64-bit hashes) and driver-known, so a literal

@@ -23,16 +23,19 @@ object Anomalies {
     * (xarray's groupby arithmetic errors on the missing key; the
     * relational translation prunes instead. Callers needing the dropped
     * rows surfaced should anti-join the output against the input.)
+    * The climatology side is broadcast unless `broadcastClim` is false
+    * ([[standardizedAnomalyAuto]]'s oversized-climatology branch).
     */
   private def joinClim(
       df: DataFrame,
       spec: SeriesSpec,
       group: Temporal.ClimGroup,
-      clim: DataFrame
+      clim: DataFrame,
+      broadcastClim: Boolean = true
   ): DataFrame = {
     spec.validate(df)
     df.withColumn(group.name, group.expr(col(spec.tsCol)))
-      .join(broadcast(clim), group.name +: spec.keyCols)
+      .join(if (broadcastClim) broadcast(clim) else clim, group.name +: spec.keyCols)
   }
 
   /** J1 — absolute anomaly: value − climatological mean
@@ -75,9 +78,23 @@ object Anomalies {
       group: Temporal.ClimGroup = Temporal.ByMonth,
       referencePeriod: Option[(String, String)] = None,
       climatology: Option[DataFrame] = None
+  ): DataFrame =
+    zscoreJoin(df, spec, group, referencePeriod, climatology, broadcastClim = true)
+
+  /** The climatology-join z-score body of [[standardizedAnomaly]] and of
+    * [[standardizedAnomalyAuto]]'s shuffle-join branch, which differ only
+    * in the broadcast hint.
+    */
+  private def zscoreJoin(
+      df: DataFrame,
+      spec: SeriesSpec,
+      group: Temporal.ClimGroup,
+      referencePeriod: Option[(String, String)],
+      climatology: Option[DataFrame],
+      broadcastClim: Boolean
   ): DataFrame = {
     val clim = climatology.getOrElse(Temporal.climatology(df, spec, group, referencePeriod))
-    val out = joinClim(df, spec, group, clim)
+    val out = joinClim(df, spec, group, clim, broadcastClim)
       .withColumn("anomaly", col(spec.valueCol) - col("clim_mean"))
       .withColumn("zscore", zdiv(col("anomaly"), col("clim_std")))
       .drop("clim_mean", "clim_std")
@@ -188,21 +205,11 @@ object Anomalies {
           .getOrElse(estimatedCells(df, spec))
         cells * group.cardinality * climRowWidth(df, spec)
     }
-    if (threshold > 0 && climBytes <= threshold)
-      standardizedAnomaly(df, spec, group, referencePeriod, climatology)
-    else if (referencePeriod.isEmpty && climatology.isEmpty)
+    val fits = threshold > 0 && climBytes <= threshold
+    if (!fits && referencePeriod.isEmpty && climatology.isEmpty)
       standardizedAnomalyWindowed(df, spec, group)
-    else {
-      val clim = climatology.getOrElse(
-        Temporal.climatology(df, spec, group, referencePeriod))
-      stampZscore(
-        df.withColumn(group.name, group.expr(col(spec.tsCol)))
-          .join(clim, group.name +: spec.keyCols)
-          .withColumn("anomaly", col(spec.valueCol) - col("clim_mean"))
-          .withColumn("zscore", zdiv(col("anomaly"), col("clim_std")))
-          .drop("clim_mean", "clim_std"),
-        spec, referencePeriod)
-    }
+    else
+      zscoreJoin(df, spec, group, referencePeriod, climatology, broadcastClim = fits)
   }
 
   /** Distinct (cell) count for the selector: free from Catalyst column

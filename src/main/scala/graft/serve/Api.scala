@@ -135,15 +135,20 @@ object Api {
       timeRange: Option[(String, String)] = None,
       latCol: String = "lat",
       lonCol: String = "lon"
-  ): DataFrame = {
-    val in = timeRange.fold(df) { case (s, e) =>
-      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
-    }
-    in.where(cellFilter(df, lat, lon, latCol, lonCol))
+  ): DataFrame =
+    inPeriod(df, spec, timeRange).where(cellFilter(df, lat, lon, latCol, lonCol))
       .select(col(spec.tsCol), col(latCol), col(lonCol), col(spec.valueCol))
       .orderBy(col(spec.tsCol))
       .limit(MaxTimeSteps)
-  }
+
+  /** The rows of `df` inside an optional `(start, end)` time window —
+    * the slice every time-scoped route applies before its own work.
+    */
+  private[serve] def inPeriod(df: DataFrame, spec: SeriesSpec,
+                              timeRange: Option[(String, String)]): DataFrame =
+    timeRange.fold(df) { case (s, e) =>
+      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
+    }
 
   /** The snapped-cell predicate every point-scoped route shares: each
     * axis's nearest STORED value, matched exactly by the zero-width range
@@ -184,11 +189,8 @@ object Api {
       latCol: String = "lat",
       lonCol: String = "lon"
   ): DataFrame = {
-    val sliced = timeRange.fold(df) { case (s, e) =>
-      df.where(TimeFns.inTimeWindow(col(spec.tsCol), s, e))
-    }
     val v = col(spec.valueCol)
-    GridSource.applyBBox(sliced, bbox, latCol, lonCol).agg(
+    GridSource.applyBBox(inPeriod(df, spec, timeRange), bbox, latCol, lonCol).agg(
       count(lit(1)).as("n"),
       avg(v).as("mean"),
       stddev_pop(v).as("std"),

@@ -368,14 +368,16 @@ object Server {
           }
         case "api" :: "v1" :: "data" :: "datasets" :: id :: "stats" :: Nil =>
           val (df, spec) = entryOr404(id)
+          val dates = timeRange(params)
           200 -> cached(ex) {
             val stats = bboxOpt(params) match {
               case Some(bbox) =>
                 require422(spec.keyCols.length >= 2,
                   s"Dataset '$id' has no (lat, lon) grid; bbox stats are not supported")
-                Api.regionStats(df, spec, bbox, timeRange(params),
+                Api.regionStats(df, spec, bbox, dates,
                   latCol = spec.keyCols.head, lonCol = spec.keyCols(1))
-              case None => Api.globalStats(df, Seq(spec.valueCol))
+              case None =>
+                Api.globalStats(Api.inPeriod(df, spec, dates), Seq(spec.valueCol))
             }
             jobj("dataset" -> jstr(id),
               "data" -> rowsJson(stats, Api.MaxPointsPerRequest),

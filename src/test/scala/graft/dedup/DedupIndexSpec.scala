@@ -20,6 +20,18 @@ class DedupIndexSpec extends SparkSpec {
     (13L, "fresh novel text with no overlap to anything indexed before")
   ).toDF("doc_id", "text")
 
+  // The reference banding that pins the persisted bucket format: explode,
+  // group by (id, band), Murmur3 over the position-sorted (i, m) structs.
+  // Dedup.bandBuckets must give these exact rows.
+  private def aggregateBandBuckets(sigs: org.apache.spark.sql.DataFrame,
+                                   idCol: String, bands: Int) =
+    sigs.select(col(idCol), posexplode(col("sig")).as(Seq("i", "m")))
+      .withColumn("band", col("i").mod(lit(bands)))
+      .groupBy(col(idCol), col("band"))
+      // sort by position before hashing: collect_list order is not
+      // deterministic across shuffles
+      .agg(hash(sort_array(collect_list(struct(col("i"), col("m"))))).as("bucket"))
+
   test("fit/query: batch near-dups found against the store, survivors clean") {
     val path = tmpDir() + "/idx"
     DedupIndex.write(corpusDocs, "doc_id", "text", path)
@@ -145,8 +157,8 @@ class DedupIndexSpec extends SparkSpec {
         .persist()
       try {
         val bands = 32
-        val now = Dedup.bandBucketsLocal(sigs, "doc_id", bands)
-        val legacy = Dedup.bandBuckets(sigs, "doc_id", bands)
+        val now = Dedup.bandBuckets(sigs, "doc_id", bands)
+        val legacy = aggregateBandBuckets(sigs, "doc_id", bands)
         assert(now.count() == legacy.count())
         assert(now.join(legacy, Seq("doc_id", "band", "bucket")).count()
           == legacy.count())

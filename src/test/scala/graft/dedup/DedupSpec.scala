@@ -38,6 +38,17 @@ class DedupSpec extends SparkSpec {
     assert(lsh == exact, s"LSH missed ${exact.diff(lsh)} / extra ${lsh.diff(exact)}")
   }
 
+  test("q_minhash_dedup caches nothing; minhashDedup plans no collect_list aggregate") {
+    spark.catalog.clearCache()
+    graft.SparkEntry.queries("q_minhash_dedup")(spark, sfDir).collect()
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    assert(cacheManager.isEmpty, "the query left a cached relation in the session")
+    val plan = Dedup.minhashDedup(docs, "doc_id", "text", 3, 64, 32, 0.5)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("collect_list"), s"banding must be scan-local, got:\n$plan")
+  }
+
   test("minhash signature expression matches the reference arithmetic") {
     import spark.implicits._
     val p = 2147483647L

@@ -103,6 +103,34 @@ class ServerSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(region.statusCode() == 200)
   }
 
+  test("stats without a bbox applies start_date/end_date; a malformed bound is a 422") {
+    val path = "/api/v1/data/datasets/era5_sample/stats"
+    val all = get(path)
+    val jan = get(path + "?start_date=2020-01-01&end_date=2020-01-31")
+    assert(all.statusCode() == 200 && jan.statusCode() == 200, jan.body())
+    // the one data row as name -> value
+    def values(json: String): Map[String, Double] =
+      "\"(\\w+)\":(-?[0-9.eE+-]+)".r.findAllMatchIn(json)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+    def data(body: String): String =
+      body.substring(body.indexOf("\"data\":"), body.indexOf(",\"timestamp\""))
+    assert(values(data(jan.body())) != values(data(all.body())))
+    import org.apache.spark.sql.functions.{col, lit}
+    val sliced = grid.where(col("ts").between(
+      lit("2020-01-01").cast("timestamp"), lit("2020-01-31").cast("timestamp")))
+    val expected = values(org.apache.spark.sql.graft.Bridge.jsonRows(
+      Api.globalStats(sliced, Seq("temperature"))).collect().mkString)
+    val got = values(data(jan.body()))
+    assert(expected.size == 6 && got.keySet == expected.keySet, jan.body())
+    // mean and std sum doubles in partition order: equal to rounding
+    expected.foreach { case (k, v) =>
+      assert(math.abs(got(k) - v) <= 1e-9 * math.max(1.0, math.abs(v)), s"$k: ${jan.body()}")
+    }
+    val bad = get(path + "?start_date=nope&end_date=2020-01-31")
+    assert(bad.statusCode() == 422, bad.body())
+    assert(bad.body().contains("start_date"))
+  }
+
   test("metric routes dispatch; invalid metric is a 422 with the allow-list") {
     val monthly = get("/api/v1/metrics/temporal/era5_sample?metric=monthly&lat=12&lon=33")
     assert(monthly.statusCode() == 200)
